@@ -42,8 +42,7 @@ object Doctor {
       "(unset: auto from corpus size)",
     "spark.graft.media.phashWideThresholdItems" -> "80000",
     "spark.graft.edgeCacheMaxEntries" -> "16",
-    "spark.graft.edgeCacheGlobalMaxEntries" -> "64",
-    "spark.graft.edgeCacheLogRows" -> "false")
+    "spark.graft.edgeCacheGlobalMaxEntries" -> "64")
 
   /** One representative query per tier — cheap at sf0.001, together
     * touching parquet scan, join/agg, window, LSH dedup, ANN, text,

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Scale-routing knobs. Exact all-pairs similarity (cross join) is
@@ -87,17 +89,10 @@ object Scale {
     * read — both fall back to the partition-count heuristic.
     */
   def rebalanceNarrowScan(df: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    val threshold = (target + 1) / 2
-    val files = try df.inputFiles catch { case _: Throwable => Array.empty[String] }
-    val narrow =
-      if (files.length >= threshold) false // ≥1 row group per file
-      else if (files.nonEmpty && files.forall(_.endsWith(".parquet")))
-        totalRowGroups(df.sparkSession, files) < threshold
-      else df.rdd.getNumPartitions < threshold
-    if (narrow) df.repartition(target) else df
-  }
+      : org.apache.spark.sql.DataFrame =
+    if (narrowScan(df, inputFiles(df)))
+      df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+    else df
 
   /** Scale-conditional fan-out decision for a checkpoint boundary
     * that feeds corpus-scale downstream chains (q153's cleaned/surv
@@ -107,7 +102,8 @@ object Scale {
     * [[rebalanceNarrowScan]] — AND large (total input bytes ≥
     * `spark.graft.fanout.minBytesPerSlot` × parallelism, default
     * 4 MB/slot); None otherwise. Both reads are driver-side metadata
-    * only (file listing + footers), no jobs.
+    * only (file listing + footers), no jobs; the narrowness test runs
+    * first, so a many-file scan never pays the per-file size lookups.
     *
     * Why conditional (r19 measured both regimes): at bench scale the
     * unconditional fan-out of q153's `cleaned` checkpoint cost +73 %
@@ -121,12 +117,9 @@ object Scale {
     */
   def fanOutTarget(df: org.apache.spark.sql.DataFrame): Option[Int] = {
     val s = df.sparkSession
+    val files = inputFiles(df)
+    if (files.isEmpty || !narrowScan(df, files)) return None
     val target = s.sparkContext.defaultParallelism
-    val threshold = (target + 1) / 2
-    val files = try df.inputFiles catch {
-      case _: Throwable => Array.empty[String]
-    }
-    if (files.isEmpty) return None
     val minPerSlot = s.conf.getOption("spark.graft.fanout.minBytesPerSlot")
       .map(_.toLong).getOrElse(4L << 20)
     val conf = s.sessionState.newHadoopConf()
@@ -134,17 +127,27 @@ object Scale {
       try {
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(conf).getFileStatus(p).getLen
-      } catch { case scala.util.control.NonFatal(_) => 0L }
+      } catch { case NonFatal(_) => 0L }
     }.sum
-    if (bytes < minPerSlot * target) None
-    else {
-      val narrow =
-        if (files.length >= threshold) false // ≥1 row group per file
-        else if (files.forall(_.endsWith(".parquet")))
-          totalRowGroups(s, files) < threshold
-        else df.rdd.getNumPartitions < threshold
-      if (narrow) Some(target) else None
-    }
+    if (bytes < minPerSlot * target) None else Some(target)
+  }
+
+  private def inputFiles(df: org.apache.spark.sql.DataFrame): Array[String] =
+    try df.inputFiles catch { case NonFatal(_) => Array.empty[String] }
+
+  /** The narrow-scan test both rebalances share: the scan's parallel
+    * ceiling is below half the cluster parallelism. Enough files
+    * guarantee ≥1 row group each; fewer parquet files are judged by
+    * their footers' row-group total; anything else by its partition
+    * count.
+    */
+  private def narrowScan(df: org.apache.spark.sql.DataFrame,
+      files: Array[String]): Boolean = {
+    val threshold = (df.sparkSession.sparkContext.defaultParallelism + 1) / 2
+    if (files.length >= threshold) false
+    else if (files.nonEmpty && files.forall(_.endsWith(".parquet")))
+      totalRowGroups(df.sparkSession, files) < threshold
+    else df.rdd.getNumPartitions < threshold
   }
 
   /** [[fanOutTarget]] applied: repartition `df` to cluster
@@ -179,26 +182,21 @@ object Scale {
           .fromPath(new org.apache.hadoop.fs.Path(f), conf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getRowGroups.size finally r.close()
-      } catch { case scala.util.control.NonFatal(_) => 1 }
+      } catch { case NonFatal(_) => 1 }
     }.sum
   }
 
-  // Decision memo: constructing a cutover query runs a count() job to
-  // pick the branch; memoize per (session, input key, current limit)
-  // so plan-only consumers (schema checks, repeated constructions)
-  // don't re-scan. Keying on the limit keeps conf overrides live.
-  private val decisions = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, Long), java.lang.Boolean]()
+  // Regime-decision memo: constructing a cutover query runs a count()
+  // job to pick the branch; memoize per (session, input key, current
+  // limit) so plan-only consumers (schema checks, repeated
+  // constructions) don't re-scan. Keying on the limit keeps conf
+  // overrides live.
 
   /** True when `count` (evaluated at most once per session/key/limit)
     * is within the exact-pair limit.
     */
-  def exactOk(s: SparkSession, key: String, count: => Long): Boolean = {
-    purgeStopped(decisions)
-    decisions.computeIfAbsent((s, key, exactPairLimit(s)),
-      _ => java.lang.Boolean.valueOf(count <= exactPairLimit(s)))
-      .booleanValue()
-  }
+  def exactOk(s: SparkSession, key: String, count: => Long): Boolean =
+    within(s, key, exactPairLimit(s))(count)
 
   /** Generic memoized regime decision for LINEAR exact paths, whose
     * affordability bound is far higher than [[exactPairLimit]]'s
@@ -209,66 +207,8 @@ object Scale {
     * sketch above it.
     */
   def within(s: SparkSession, key: String, limit: Long)(
-      count: => Long): Boolean = {
-    purgeStopped(decisions)
-    decisions.computeIfAbsent((s, key, limit),
-      _ => java.lang.Boolean.valueOf(count <= limit))
-      .booleanValue()
-  }
-
-  // Standing-index caches persist their parquet form under
-  // java.io.tmpdir. The directory must outlive the cache-map entry —
-  // loaded DataFrames keep reading it lazily — so eviction can't
-  // delete it; without a reclaim path every Verify/Bench/sweep run
-  // leaks a full ccell-partitioned corpus copy into /tmp. Register
-  // each dir here and walk-delete them all in one JVM shutdown hook.
-  private val tempDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-
-  private lazy val shutdownHookInstalled: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      tempDirs.forEach(deleteRecursively(_))
-    }))
-
-  /** Create a temp directory that is recursively deleted at JVM exit.
-    * All engine caches that persist index artifacts go through this.
-    */
-  def managedTempDir(prefix: String): java.nio.file.Path = {
-    shutdownHookInstalled
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    tempDirs.add(p)
-    p
-  }
-
-  private def deleteRecursively(root: java.nio.file.Path): Unit =
-    try {
-      val walk = java.nio.file.Files.walk(root)
-      try {
-        walk.sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-      } finally walk.close()
-    } catch {
-      // NonFatal, not just IOException: Files.walk's lazy traversal
-      // surfaces failures as UncheckedIOException (a RuntimeException),
-      // and one bad dir aborting the shutdown hook would leak every
-      // dir queued behind it — the exact leak this mechanism exists
-      // to prevent.
-      case scala.util.control.NonFatal(_) => ()
-    }
-
-  /** Evict cache entries bound to stopped sessions (keys are tuples
-    * whose first element is the SparkSession). The engine's
-    * session-keyed caches call this on access, so same-JVM session
-    * churn cannot grow them unboundedly or pin dead sessions.
-    */
-  def purgeStopped[K <: Product, V](
-      m: java.util.concurrent.ConcurrentHashMap[K, V]): Unit = {
-    val it = m.keySet().iterator()
-    while (it.hasNext) it.next().productElement(0) match {
-      case sess: SparkSession if sess.sparkContext.isStopped => it.remove()
-      case _ => ()
-    }
-  }
+      count: => Long): Boolean =
+    StandingState(s, ("scale.decision", key, limit))(count <= limit)
 
   /** Apply `SPARK_GRAFT_SESSION_CONFS` ("k=v;k2=v2") to the session —
     * the experiment passthrough shared by the Verify and ScaleSweep

@@ -78,7 +78,7 @@ object ScaleSweep {
     // vector corpus has HEALTHY cell shapes. Verbatim replicas are
     // indivisible for any vector-space partitioner — at 100× every
     // fine cell was a multiple of 100 copies and the size-biased
-    // probed cell ran 3.1× inflated (CellProfile), a replication
+    // probed cell ran 3.1× inflated, a replication
     // artifact no real corpus exhibits. ±0.1/dim uniform on a
     // unit-norm 64-dim vector ⇒ copy↔base cosine ≈ 0.9: replicas
     // stay base-related (the corpus keeps its geometry) but are
@@ -296,9 +296,8 @@ object ScaleSweep {
       // MEDIAN, which cost seven false-mover re-measures in the r15
       // round-close alone (and r14's 37-64s stall-confounded graph
       // figures). One UNTIMED warmup run for those members makes the
-      // medians steady-state; the build price has its own dedicated
-      // instruments (EdgeCacheBuildProbe, the probes' rep-1 columns),
-      // and the `warmed` list in SWEEP_JSON flags the accounting so
+      // medians steady-state; the build price is measured separately
+      // (the perfbench catalog build pass), and the `warmed` list in SWEEP_JSON flags the accounting so
       // a cross-round comparison can never mistake it for a kernel
       // win (the compare_bench warm-family lesson, applied here).
       val warm = Bench.isWarm(name)
@@ -359,9 +358,9 @@ object ScaleSweep {
       .mkString("[", ",", "]")
     // Streaming-tier entry (r14 verdict item 5): the batch and
     // incremental media tiers have sweep points; the streaming video
-    // near-dup had probe curves (VideoStreamProbe) but no STANDING
+    // near-dup had probe curves (SWEEP_r13) but no STANDING
     // sweep entry, so a regression there was invisible to the
-    // round-close net. Same corpus generator as the probe (id-seeded
+    // round-close net. Same corpus generator as those curves (id-seeded
     // originals + planted transformed copies, replica ids in the
     // high bits so cross-replica content is unrelated and true pairs
     // grow k×), driven through videoNearDupStream as MemoryStream

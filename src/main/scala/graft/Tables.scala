@@ -94,11 +94,6 @@ object Tables {
         / 10).cast("double") / 10) + lit(0.5)).as("score"),
       col("ts"))
 
-  // Keyed by (session, dir) like Dedup.pairsCache: a cached DataFrame
-  // is bound to the session that built it.
-  private val ratingsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   /** [[ratings]] persisted once per (session, sfDir). The streaming
     * rescorer references the derived table three times (recent window,
     * co-occurrence self-join, rated anti-set) and the ALS family
@@ -108,13 +103,11 @@ object Tables {
     * at cluster scale this is the "materialize the fact-derived view
     * once per job" pattern, not a driver-side shortcut.
     */
-  def cachedRatings(spark: SparkSession, dir: String): DataFrame = {
-    Scale.purgeStopped(ratingsCache)
-    ratingsCache.computeIfAbsent((spark, dir), _ => {
+  def cachedRatings(spark: SparkSession, dir: String): DataFrame =
+    StandingState(spark, ("tables.ratings", dir)) {
       val r = ratings(spark, dir)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       r.count()
       r
-    })
-  }
+    }
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import graft.{QueryDef, Scale, Tables}
+import graft.{QueryDef, Scale, StandingState, Tables}
 import graft.functions.HashFunctions._
 import graft.functions.VectorFunctions.cosine_sim
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -72,15 +72,8 @@ object Dedup {
   private[dedup] case class CollapsedPairs(mem: DataFrame,
       repPairs: DataFrame)
 
-  // Keyed by (session, dir): a cached DataFrame is bound to the
-  // session that built it, so a same-JVM session restart misses
-  // instead of returning a handle into a stopped session.
-  private val pairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), CollapsedPairs]()
-
-  private def collapsedPairs(s: SparkSession, d: String): CollapsedPairs = {
-    Scale.purgeStopped(pairsCache)
-    pairsCache.computeIfAbsent((s, d), _ => {
+  private def collapsedPairs(s: SparkSession, d: String): CollapsedPairs =
+    StandingState(s, ("dedup.collapsedPairs", d)) {
       // The token-set table feeds three subtrees (signature build +
       // two candidate re-attach joins); persist it while the
       // artifacts materialize, then release.
@@ -96,8 +89,7 @@ object Dedup {
           .localCheckpoint())
       sets.unpersist()
       out
-    })
-  }
+    }
 
   /** Compute-once-per-sfDir verified near-dup pairs, fully expanded
     * (q31's contract; RecallSpec gates them). Expansion runs over the
@@ -433,9 +425,6 @@ object Dedup {
   def loadSignatureStore(s: SparkSession, storeDir: String): DataFrame =
     s.read.parquet(s"$storeDir/minhash")
 
-  private val textAutoLogged = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[(SparkSession, Boolean)]()
-
   /** Count-aware text minhash layout `(numHashes, bands)`: the
     * manual dial `spark.graft.text.wideMinhashBands` wins when set
     * (either way); otherwise resolve from the candidate-population
@@ -450,10 +439,7 @@ object Dedup {
       case None =>
         val n = corpusDocs
         val wide = n > textWideThresholdDocs(spark)
-        if (textAutoLogged.add((spark, wide))) {
-          val it = textAutoLogged.iterator()
-          while (it.hasNext)
-            if (it.next()._1.sparkContext.isStopped) it.remove()
+        StandingState(spark, ("dedup.textLayoutLogged", wide)) {
           System.err.println(s"[text] minhash band layout auto-" +
             s"resolved ${if (wide) "wide 12x12" else "8x8"} " +
             s"(docs=$n, threshold=${textWideThresholdDocs(spark)})")
@@ -935,7 +921,12 @@ object Dedup {
     // Cache the raw edges BEFORE symmetrizing: `union` evaluates its
     // two branches independently, so an uncached (possibly expensive)
     // upstream — e.g. the whole LSH pipeline — would run twice.
-    val e = edges.toDF("src", "dst").cache()
+    // Ids are normalized to long here, so both solve paths read and
+    // return longs whatever the input's integral id type.
+    val e = edges.toDF("src", "dst")
+      .select(col("src").cast("long").as("src"),
+        col("dst").cast("long").as("dst"))
+      .cache()
     // Whole-graph driver union-find below the local-solve bound (r20):
     // the distributed path costs ~6 fixed-overhead jobs (symmetrize +
     // distinct, init labels, propagate + jump + changed-count,
@@ -1010,15 +1001,11 @@ object Dedup {
   // Label-once per (session, dir): q49 reports the labels, q110's
   // split and keepBest both consume them — a curation run computes
   // the clustering exactly once, so the library does too.
-  private val clusterCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   /** Cached near-dup cluster labeling `(doc_id, cluster_id,
     * is_keeper)` for a corpus — the compute-once core of q49/q110.
     */
-  def clusterLabels(s: SparkSession, d: String): DataFrame = {
-    graft.Scale.purgeStopped(clusterCache)
-    clusterCache.computeIfAbsent((s, d), _ => {
+  def clusterLabels(s: SparkSession, d: String): DataFrame =
+    StandingState(s, ("dedup.clusterLabels", d)) {
       val docs = Tables.documents(s, d)
       // sparse star+rep edges, NOT the expanded pair listing:
       // identical connectivity (hence identical labels — every clique
@@ -1035,45 +1022,34 @@ object Dedup {
         .cache()
       out.count()
       out
-    })
-  }
+    }
 
   // The exact-pair sibling of [[clusterLabels]]: CC labels over the
   // 1-in-4-sample EXACT pair set (q121's cached intermediate) — the
   // clustering q110's leakage-safe split consumes. Same label-once
   // discipline; a split audit labels its corpus once per snapshot.
-  private val exactClusterCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   /** Cached `(doc_id, label)` CC labeling of
     * [[SetSimJoin.cachedQuarterPairs]], persisted per (session, dir).
     */
-  def exactClusterLabels(s: SparkSession, d: String): DataFrame = {
-    graft.Scale.purgeStopped(exactClusterCache)
-    exactClusterCache.computeIfAbsent((s, d), _ => {
+  def exactClusterLabels(s: SparkSession, d: String): DataFrame =
+    StandingState(s, ("dedup.exactClusterLabels", d)) {
       val pairs = SetSimJoin.cachedQuarterPairs(s, d)
         .select("doc_a", "doc_b")
       val out = connectedComponents(pairs)
         .withColumnRenamed("id", "doc_id").cache()
       out.count()
       out
-    })
-  }
+    }
 
-  // Label-once cache for the EXACT-edge full-corpus clustering (the
-  // q49 exact regime) — same discipline as clusterCache.
-  private val exactFullClusterCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (SparkSession, String), DataFrame]()
-
+  // Label-once for the EXACT-edge full-corpus clustering (the q49
+  // exact regime) — same discipline as clusterLabels.
   /** Full-corpus cluster labeling over the EXACT Jaccard ≥ 0.9 pair
     * set ([[SetSimJoin.allPairs]] — prefix-filtered, zero recall
     * loss): the recall-1.0 spelling of [[clusterLabels]]' LSH edges,
     * affordable while the corpus fits the exact-pair limit.
     */
-  def exactFullClusterLabels(s: SparkSession, d: String): DataFrame = {
-    graft.Scale.purgeStopped(exactFullClusterCache)
-    exactFullClusterCache.computeIfAbsent((s, d), _ => {
+  def exactFullClusterLabels(s: SparkSession, d: String): DataFrame =
+    StandingState(s, ("dedup.exactFullClusterLabels", d)) {
       val docs = Tables.documents(s, d)
       val comp = connectedComponents(
         SetSimJoin.allPairs(docs, "doc_id", "text", 0.9)
@@ -1087,8 +1063,7 @@ object Dedup {
         .cache()
       out.count()
       out
-    })
-  }
+    }
 
   /** Corpus bound for q49's exact regime. Deliberately TIGHTER than
     * [[graft.Scale.exactPairLimit]]: the engine-side exact pass is

@@ -143,27 +143,22 @@ object SetSimJoin {
   // .cachedRatings: one (session, dir) builds it once and every
   // consumer reuses the persisted pairs — at cluster scale this is
   // "write the pair table once per corpus snapshot", not a local
-  // shortcut. Keyed per session; purged with stopped sessions.
-  private val pairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String),
-    org.apache.spark.sql.DataFrame]()
+  // shortcut.
 
   /** [[allPairs]] over the deterministic 1-in-4 document subsample at
     * the default threshold — (doc_a, doc_b, jaccard), persisted once
     * per (session, sfDir).
     */
   def cachedQuarterPairs(s: org.apache.spark.sql.SparkSession,
-      d: String): org.apache.spark.sql.DataFrame = {
-    graft.Scale.purgeStopped(pairsCache)
-    pairsCache.computeIfAbsent((s, d), _ => {
+      d: String): org.apache.spark.sql.DataFrame =
+    graft.StandingState(s, ("dedup.quarterPairs", d)) {
       val p = allPairs(
         Tables.documents(s, d).filter(col("doc_id") % 4 === 0),
         "doc_id", "text")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       p.count()
       p
-    })
-  }
+    }
 
   /** q121 — exact Jaccard ≥ 0.6 self-join, registered on a
     * deterministic 1-in-4 document subsample (q33's precedent). The

@@ -204,8 +204,8 @@ case class PackFloats(child: Expression)
   * bit-identical on the same inputs; only the storage each pair row
   * drags through the join differs. Built to price the exact-kNN
   * kernel's residual per-pair row-pipeline tax (SWEEP_r12 measured
-  * ~0.8 µs/pair around the codegen'd cosine); KnnKernelProbe
-  * carries the packed-vs-array measurement and the keep/switch call.
+  * ~0.8 µs/pair around the codegen'd cosine); the packed-vs-array
+  * measurement and the keep call are in [[graft.search.Ann.exactKnnPairs]].
   */
 case class CosineSimilarityPacked(left: Expression, right: Expression)
     extends BinaryExpression {

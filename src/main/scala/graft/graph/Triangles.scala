@@ -1,6 +1,6 @@
 package graft.graph
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, StandingState, Tables}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -146,12 +146,11 @@ object Triangles {
   // family. Both are aggregate outputs (unique part pairs — ~edge
   // count, not lineitem count), so the persisted footprint is small.
   //
-  // Residency policy (r15, lifecycle tightened r16 per ADVICE): keys
-  // are (session, CANONICAL dir, kind) — canonicalized so trailing-
-  // slash/symlink aliases of one dir share one build — purged with
-  // stopped sessions (queue AND map — a stale queue node would pin a
-  // stopped session indefinitely), and CAPPED PER SESSION at
-  // MaxEntriesPerSession (insertion-order eviction within the
+  // Residency policy (r15, lifecycle tightened r16 per ADVICE): the
+  // entries live in [[graft.StandingState]] under keys ("graph.edges",
+  // CANONICAL dir, kind) — canonicalized so trailing-slash/symlink
+  // aliases of one dir share one build — and are CAPPED PER SESSION
+  // at MaxEntriesPerSession (insertion-order eviction within the
   // session; 16 = 8 dirs × 2 kinds, far above any real session's dir
   // churn). A global cap ALONE was wrong here: with many concurrently
   // live sessions it evicted OTHER sessions' live entries and every
@@ -161,24 +160,14 @@ object Triangles {
   // cap and global backstop alike (r17, per ADVICE) — is a reference
   // drop, never a prompt unpersist: an in-flight job may hold the
   // frame and a localCheckpoint cannot recompute (lineage cut), so
-  // unpersist would abort it with missing blocks. Dropped holders
+  // unpersist would abort it with missing blocks. Dropped frames
   // become unreachable immediately, and the ContextCleaner reclaims
   // the blocks on the next GC (bounded by
   // spark.cleaner.periodicGC.interval). Contract: consumers re-fetch via
   // cachedEdges per query and never hold an evicted frame across
   // calls. Each build logs its partition footprint so residency is
-  // observable (row count only behind spark.graft.edgeCacheLogRows —
-  // an always-on count() billed an extra job to whichever consumer
-  // triggered the cold build and inflated EdgeCacheBuildProbe's
-  // build_sec).
-  private final class EdgeHolder(build: () => DataFrame) {
-    // lazy, so the Spark job the build runs executes OUTSIDE the
-    // CHM bin lock and the bookkeeping lock (computeIfAbsent holds
-    // its bin for the mapping function's duration, which would
-    // serialize unrelated keys hashing to the same bin behind a
-    // multi-second job)
-    lazy val df: DataFrame = build()
-  }
+  // observable.
+
   /** Resident (dir, kind) entries allowed per session — conf dial
     * `spark.graft.edgeCacheMaxEntries` (default 16 = 8 dirs × 2
     * kinds, far above any real session's dir churn).
@@ -191,46 +180,45 @@ object Triangles {
   /** Global backstop across ALL sessions — conf dial
     * `spark.graft.edgeCacheGlobalMaxEntries` (default 64). The
     * per-session cap cannot bound `newSession()` churn on a live
-    * context: purgeStopped keys on CONTEXT stop, so a discarded
+    * context: StandingState purges on CONTEXT stop, so a discarded
     * session object (probe loops, notebook re-runs) pins its ≤ cap
     * entries until then. The backstop drops the globally oldest
     * entries of OTHER sessions once the total exceeds it (reference
-    * drop only — see the eviction policy above), so the bookkeeping
-    * map stays bounded however many sessions come and go, and the
-    * dropped frames' blocks are GC-reclaimed via the ContextCleaner.
+    * drop only — see the eviction policy above), so residency stays
+    * bounded however many sessions come and go, and the dropped
+    * frames' blocks are GC-reclaimed via the ContextCleaner.
     */
   private def globalMaxEntries(
       s: org.apache.spark.sql.SparkSession): Int =
     s.conf.getOption("spark.graft.edgeCacheGlobalMaxEntries")
       .map(_.toInt).getOrElse(64)
-  private val edgeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), EdgeHolder]()
-  private val edgeOrder = new java.util.concurrent.ConcurrentLinkedQueue[
-    (org.apache.spark.sql.SparkSession, String, String)]()
-  // guards the map+queue BOOKKEEPING only (cheap); builds run outside
-  private val edgeLock = new Object
 
   private def canonicalDir(d: String): String =
     try new java.io.File(d).getCanonicalPath
     catch { case _: java.io.IOException => d }
 
+  // StandingState key tag of the edge tables: (EdgeTag, dir, kind)
+  private val EdgeTag = "graph.edges"
+
+  private def isEdgeKey(k: (org.apache.spark.sql.SparkSession, Any)) =
+    k._2 match {
+      case (EdgeTag, _, _) => true
+      case _ => false
+    }
+
   /** (dir, kind) keys currently resident for `s` — test/diagnostic
     * visibility for the residency policy.
     */
   private[graft] def edgeCacheKeys(s: org.apache.spark.sql.SparkSession)
-      : Set[(String, String)] = {
-    val it = edgeCache.keySet().iterator()
-    val b = Set.newBuilder[(String, String)]
-    while (it.hasNext) {
-      val k = it.next()
-      if (k._1 eq s) b += ((k._2, k._3))
-    }
-    b.result()
-  }
+      : Set[(String, String)] =
+    StandingState.resident.collect {
+      case (ss, (EdgeTag, d: String, kind: String)) if ss eq s =>
+        (d, kind)
+    }.toSet
 
   private def cachedEdges(s: org.apache.spark.sql.SparkSession,
       d: String, kind: String)(build: => DataFrame): DataFrame = {
-    val key = (s, canonicalDir(d), kind)
+    val key = (EdgeTag, canonicalDir(d), kind)
     // localCheckpoint, NOT persist: persist snapshots the PRE-adaptive
     // plan, so the stored relation keeps the static shuffle partition
     // count (32) where direct execution AQE-coalesces the small edge
@@ -241,80 +229,29 @@ object Triangles {
     // result blocks with lineage cut — the same artifact the
     // consumers used to build privately, now shared per (session,
     // dir) for the session's lifetime (or until evicted by the cap).
-    val holder = edgeLock.synchronized {
-      graft.Scale.purgeStopped(edgeCache)
-      // drain queue nodes whose key is gone (session purge above, or
-      // a prior eviction) so stopped sessions are not pinned by the
-      // queue and the queue stays O(resident entries)
-      edgeOrder.removeIf(k => !edgeCache.containsKey(k))
-      val h = edgeCache.computeIfAbsent(key, k => {
-        edgeOrder.add(k)
-        new EdgeHolder(() => {
-          val df = build.localCheckpoint()
-          val rows =
-            if (s.conf.getOption("spark.graft.edgeCacheLogRows")
-                .exists(_.toBoolean)) s"rows=${df.count()} "
-            else ""
-          System.err.println(s"[graph] edge cache built kind=$kind " +
-            s"dir=${key._2} $rows" +
-            s"partitions=${df.rdd.getNumPartitions} " +
-            s"entries=${edgeCache.size}")
-          df
-        })
-      })
-      // per-session cap: evict THIS session's oldest entries only —
-      // never another live session's (ADVICE r15). Reference drop
-      // WITHOUT unpersist: a concurrent query in this session may be
-      // mid-job on the evicted frame, and a localCheckpoint cannot
-      // recompute (lineage cut) — prompt unpersist here would abort
-      // that job (r16 review). The ContextCleaner reclaims the
-      // blocks once the last consumer's RDD reference is GC'd.
-      def sessionKeys =
-        java.util.Collections.list(edgeCache.keys()).iterator()
-      var mine = 0
-      sessionKeys.forEachRemaining(k => if (k._1 eq s) mine += 1)
-      val cap = maxEntriesPerSession(s)
-      if (mine > cap) {
-        val it = edgeOrder.iterator()
-        while (mine > cap && it.hasNext) {
-          val k = it.next()
-          if ((k._1 eq s) && k != key) {
-            edgeCache.remove(k)
-            it.remove()
-            mine -= 1
-          }
-        }
+    StandingState(s, key) {
+      // the new entry is resident from here on, so the caps are
+      // enforced as it enters, before its build runs
+      StandingState.evict { resident =>
+        val edges = resident.filter(isEdgeKey)
+        // per-session cap: THIS session's oldest entries only — never
+        // another live session's (ADVICE r15)
+        val mine = edges.filter(_._1 eq s)
+        val overCap = mine.filter(_._2 != key)
+          .take(mine.size - maxEntriesPerSession(s))
+        // global backstop: OTHER sessions' oldest entries, counted
+        // after the per-session eviction above
+        val left = edges.filterNot(overCap.contains)
+        val overGlobal = left.filter(k => !(k._1 eq s))
+          .take(left.size - globalMaxEntries(s))
+        overCap ++ overGlobal
       }
-      // global backstop: bound TOTAL map residency against
-      // newSession() churn the session cap can't see. Evicts only
-      // OTHER sessions' entries, oldest first, by REFERENCE DROP —
-      // never a prompt unpersist (r16 ADVICE): "oldest" is insertion
-      // order, so the victim can be another LIVE session's hottest
-      // frame with a job mid-flight on it, and a localCheckpoint
-      // cannot recompute (lineage cut) — unpersisting here would
-      // abort that job with missing blocks. Dropping the reference
-      // instead makes eviction always safe: a live session that
-      // loses an entry rebuilds on its next cachedEdges call, and
-      // the blocks of genuinely-churned sessions become unreachable
-      // the moment the holder is dropped, so the ContextCleaner
-      // reclaims them on the next GC (bounded by
-      // spark.cleaner.periodicGC.interval) — the same reclaim path
-      // the per-session eviction above already relies on. The cap's
-      // job is purely bounding the bookkeeping map.
-      val gCap = globalMaxEntries(s)
-      if (edgeCache.size > gCap) {
-        val it = edgeOrder.iterator()
-        while (edgeCache.size > gCap && it.hasNext) {
-          val k = it.next()
-          if (!(k._1 eq s) && k != key) {
-            edgeCache.remove(k)
-            it.remove()
-          }
-        }
-      }
-      h
+      val df = build.localCheckpoint()
+      System.err.println(s"[graph] edge cache built kind=$kind " +
+        s"dir=${key._2} partitions=${df.rdd.getNumPartitions} " +
+        s"entries=${StandingState.resident.count(isEdgeKey)}")
+      df
     }
-    holder.df
   }
 
   /** [[adjacentPartPairs]] aggregated to weighted directed edges

@@ -62,21 +62,15 @@ object QualityModel {
   // scored with, so the model is shared by the query, the AUC gate,
   // and Verify's `_lr_model.json` dump. Also the serving shape a
   // deployment runs: train on the maintenance schedule, score many.
-  private val modelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String),
-    org.apache.spark.ml.classification.LogisticRegressionModel]()
-
   private[graft] def trainedModel(s: SparkSession, d: String)
-      : org.apache.spark.ml.classification.LogisticRegressionModel = {
-    graft.Scale.purgeStopped(modelCache)
-    modelCache.computeIfAbsent((s, d), _ => {
+      : org.apache.spark.ml.classification.LogisticRegressionModel =
+    graft.StandingState(s, ("ml.qualityModel", d)) {
       val Array(train, _) =
         featureTable(s, d).randomSplit(Array(0.8, 0.2), seed = 42L)
       new LogisticRegression()
         .setMaxIter(10).setRegParam(0.01).setStandardization(true)
         .fit(train)
-    })
-  }
+    }
 
   /** q77 — score every document with a logistic model trained on an
     * 80% split of heuristic labels. Scoring is replayed cell-for-cell

@@ -121,19 +121,13 @@ object MediaDedup {
         // observable resolution, once per (session, outcome): a
         // stream running next to an auto-upgraded batch needs the
         // dial set, and this line is how an operator learns that
-        if (autoLogged.add((spark, wide))) {
-          val it = autoLogged.iterator()
-          while (it.hasNext)
-            if (it.next()._1.sparkContext.isStopped) it.remove()
+        graft.StandingState(spark, ("mm.phashLayoutLogged", wide)) {
           System.err.println(s"[media] phash band layout auto-" +
             s"resolved ${if (wide) "wide 3x21" else "4x16"} " +
             s"(items=$n, threshold=${phashWideThresholdItems(spark)})")
         }
         if (wide) WideLayout else NarrowLayout
     }
-
-  private val autoLogged = java.util.concurrent.ConcurrentHashMap
-    .newKeySet[(org.apache.spark.sql.SparkSession, Boolean)]()
 
   /** Band layout for STREAMING surfaces. An unbounded stream has no
     * plan-time corpus count (its candidate population is the
@@ -391,22 +385,18 @@ object MediaDedup {
   // once per session under a managed temp dir like Ann.cachedIndex's
   // parquet form. The store layout is modality-blind (any 64-bit
   // perceptual hash), so one lifecycle serves every modality.
-  private val storeCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), String]()
-
   private[mm] def corpusPhashStore(s: org.apache.spark.sql.SparkSession,
-      d: String, modality: String = "image"): String = {
-    graft.Scale.purgeStopped(storeCache)
-    storeCache.computeIfAbsent((s, d, modality), _ => {
-      val dir = graft.Scale.managedTempDir("graft_phash").toString + "/idx"
+      d: String, modality: String = "image"): String =
+    graft.StandingState(s, ("mm.phashStore", d, modality)) {
+      val dir =
+        graft.StandingState.managedTempDir("graft_phash").toString + "/idx"
       val hashes = modality match {
         case "audio" => audioHashes(s, d)
         case _ => imageHashes(s, d)
       }
       savePhashIndex(hashes.filter(col("doc_id") % 7 =!= 0), dir)
       dir
-    })
-  }
+    }
 
   /** q157 — incremental media near-dup: the 1-in-7 slice of the
     * image corpus stands in for a newly-crawled batch; the standing
@@ -625,18 +615,13 @@ object MediaDedup {
   // [[graft.dedup.Dedup.clusterLabels]] compute-once discipline. The
   // cached frame is ids+hashes only (~16 B/doc); rasters/PCM never
   // outlive the scan.
-  private val hashCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String, String), DataFrame]()
-
   private[mm] def cachedHashes(s: org.apache.spark.sql.SparkSession,
-      d: String, modality: String)(build: => DataFrame): DataFrame = {
-    graft.Scale.purgeStopped(hashCache)
-    hashCache.computeIfAbsent((s, d, modality), _ => {
+      d: String, modality: String)(build: => DataFrame): DataFrame =
+    graft.StandingState(s, ("mm.hashes", d, modality)) {
       val out = build.cache()
       out.count()
       out
-    })
-  }
+    }
 
   /** Cached (doc_id, phash) over [[mediaCorpus]]. */
   def imageHashes(s: org.apache.spark.sql.SparkSession, d: String)

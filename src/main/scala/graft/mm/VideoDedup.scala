@@ -290,19 +290,15 @@ object VideoDedup {
   def loadFrameIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame = s.read.parquet(s"$dir/fhash")
 
-  private val frameStoreCache = new java.util.concurrent.ConcurrentHashMap[
-    (org.apache.spark.sql.SparkSession, String), String]()
-
   private[mm] def corpusFrameStore(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    graft.Scale.purgeStopped(frameStoreCache)
-    frameStoreCache.computeIfAbsent((s, d), _ => {
-      val dir = graft.Scale.managedTempDir("graft_fhash").toString + "/idx"
+      d: String): String =
+    graft.StandingState(s, ("mm.frameStore", d)) {
+      val dir =
+        graft.StandingState.managedTempDir("graft_fhash").toString + "/idx"
       saveFrameIndex(videoHashes(s, d).filter(col("video_id") % 7 =!= 0),
         dir)
       dir
-    })
-  }
+    }
 
   /** Near-duplicate video pairs of a NEW batch against a standing
     * frame-hash index — [[MediaDedup.incrementalNearDupPairs]]' O(Δ)

@@ -129,10 +129,6 @@ object Pq {
   // q84/q136; "mod10" is q139's standing corpus, whose codebooks stay
   // FROZEN while the delta batch encodes against them. Cache keys
   // purge with stopped sessions.
-  private val indexCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String, String),
-    (DataFrame, Array[Array[Array[Double]]])]()
-
   /** The trained PQ index for the full corpus: cached code table +
     * per-subspace codebooks.
     */
@@ -145,15 +141,13 @@ object Pq {
     */
   private[graft] def sliceIndex(s: SparkSession, d: String,
       variant: String, corpus: => DataFrame)
-      : (DataFrame, Array[Array[Array[Double]]]) = {
-    graft.Scale.purgeStopped(indexCache)
-    indexCache.computeIfAbsent((s, d, variant), _ => {
+      : (DataFrame, Array[Array[Array[Double]]]) =
+    graft.StandingState(s, ("search.pqIndex", d, variant)) {
       val (codes, books) = encode(corpus)
       val c = codes.cache()
       c.count()
       (c, books)
-    })
-  }
+    }
 
   /** PQ-encode `emb` against FROZEN codebooks — the ingest half of
     * incremental indexing (no k-means touched): per subspace, the
@@ -269,9 +263,6 @@ object Pq {
   // state, equi-joinable on the probe keys. Cached per (session, dir)
   // like its two constituents (both of which it reuses, so a warm
   // session pays one equi join, not a re-train).
-  private val composedCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
   /** Persist a composed cell-code table partitioned by `ccell` —
     * the same standing-index lifecycle as [[Ann.saveIvfIndex]], and
     * for the same reason: a loaded code table's ADC join carries a
@@ -293,9 +284,8 @@ object Pq {
     * (session, dir), persisted partitioned by ccell, and SERVED from
     * the loaded form (the [[Ann.cachedIndex]] discipline).
     */
-  def ivfPqCellCodes(s: SparkSession, d: String): DataFrame = {
-    graft.Scale.purgeStopped(composedCache)
-    composedCache.computeIfAbsent((s, d), _ => {
+  def ivfPqCellCodes(s: SparkSession, d: String): DataFrame =
+    graft.StandingState(s, ("search.ivfPqCellCodes", d)) {
       val emb = Tables.embeddings(s, d)
       val index = Ann.cachedIndex(s, d, "full", emb)
       val (codes, _) = indexFor(s, d)
@@ -303,11 +293,10 @@ object Pq {
         .join(codes.withColumnRenamed("vec_id", "neighbor_id"),
           "neighbor_id")
       val dir =
-        graft.Scale.managedTempDir("graft_ivfpq").toString + "/idx"
+        graft.StandingState.managedTempDir("graft_ivfpq").toString + "/idx"
       saveCellCodes(cc, dir)
       loadCellCodes(s, dir)
-    })
-  }
+    }
 
   /** q136 — the IVF·PQ composition (the IVFADC of Jégou et al. §IV):
     * route each query through the two-level IVF to its nprobe fine
@@ -333,8 +322,8 @@ object Pq {
   }
 
   /** The q136 search at an explicit probe width — exposed so the
-    * recall-vs-nprobe curve ([[graft.PqProbe]]) can measure the dial
-    * the composition sells (the q119 dim-ablation precedent applied
+    * recall-vs-nprobe curve can measure the dial the composition
+    * sells (the q119 dim-ablation precedent applied
     * to nprobe).
     */
   def ivfPqSearch(s: SparkSession, d: String, nprobe: Int,
@@ -346,26 +335,20 @@ object Pq {
     // with a DIFFERENT measured crossover: this is a one-shot batch
     // (Q=10), so the keyed join's fixed cost (DPP subquery + extra
     // exchanges) amortizes over one run, not a trigger stream —
-    // BatchRerankProbe measures flat faster at every corpus this
-    // sandbox holds, so the default stays flat below
+    // flat measured faster on corpora up to 60k rows, so the default
+    // stays flat below
     // [[BatchKeyedRerankMinRows]] and the keyed shape (coverage
     // identical — the index is built over the full table, and its
     // scan prunes to probed cells like the code table's) is
     // plan-pinned and overridable for the corpus sizes where a flat
     // raw-float scan stops being an option.
-    graft.Scale.purgeStopped(batchKeyedDecision)
     val useKeyed = keyed.getOrElse(
-      batchKeyedDecision.computeIfAbsent((s, d), _ =>
-        java.lang.Boolean.valueOf(
-          index.assigned.count() >= BatchKeyedRerankMinRows))
-        .booleanValue())
+      graft.StandingState(s, ("search.batchKeyedRerank", d))(
+        index.assigned.count() >= BatchKeyedRerankMinRows))
     val rerank = if (useKeyed) keyedRerank(index) else emb
     adcSearch(index, books, ivfPqCellCodes(s, d),
       emb.filter(col("vec_id") < NumQueries), rerank, nprobe)
   }
-
-  private val batchKeyedDecision = new java.util.concurrent
-    .ConcurrentHashMap[(SparkSession, String), java.lang.Boolean]()
 
   /** Shared ADC lookup: route `queries` through `index` to nprobe
     * cells, ADC-score only probed cells' rows in `cellCodes`,
@@ -489,12 +472,8 @@ object Pq {
   // slice ingested through the frozen index and APPENDED in place —
   // new parquet files land only under the delta's probed ccell
   // directories; existing corpus files are never rewritten.
-  private val incrCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  def incrementalCellCodes(s: SparkSession, d: String): DataFrame = {
-    graft.Scale.purgeStopped(incrCache)
-    incrCache.computeIfAbsent((s, d), _ => {
+  def incrementalCellCodes(s: SparkSession, d: String): DataFrame =
+    graft.StandingState(s, ("search.incrementalCellCodes", d)) {
       val emb = Tables.embeddings(s, d)
       val corpus = emb.filter(col("vec_id") % 10 =!= 0)
       val index = Ann.cachedIndex(s, d, "mod10", corpus)
@@ -503,14 +482,14 @@ object Pq {
         .join(codes.withColumnRenamed("vec_id", "neighbor_id"),
           "neighbor_id")
       val dir =
-        graft.Scale.managedTempDir("graft_ivfpq_incr").toString + "/idx"
+        graft.StandingState.managedTempDir("graft_ivfpq_incr").toString +
+          "/idx"
       saveCellCodes(cc, dir)
       appendCellCodes(
         deltaCellCodes(index, emb.filter(col("vec_id") % 10 === 0),
           books), dir)
       loadCellCodes(s, dir)
-    })
-  }
+    }
 
   /** The gate's parity half: persisted appended delta rows diffed
     * pair-for-pair against the batch replay of the same frozen-index
@@ -626,56 +605,12 @@ object Pq {
     // partitioned on disk, so each data file's leading path segment
     // names its cell; max-over-cells ≥ the old aggregate average, so
     // this triggers at least as often under uniform ingest too.
-    val perCell = perCellDataFileCounts(fs, tier)
-    val worst = if (perCell.isEmpty) 0L else perCell.valuesIterator.max
+    val perCell = dataFiles(fs, tier).groupBy(_.takeWhile(_ != '/'))
+    val worst = if (perCell.isEmpty) 0 else perCell.valuesIterator.map(_.size).max
     if (worst <= filesPerCell) false
     else {
-      val t0 = System.nanoTime()
       compactStore(s, dir)
-      CompactionStats.record(dir, (System.nanoTime() - t0) / 1e9)
       true
-    }
-  }
-
-  /** Data files per ccell=N partition of a store tier — the ONE
-    * definition of "files per cell" shared by the compaction policy
-    * ([[maybeCompact]]'s trigger) and the measurement harnesses
-    * (CompactionProbe's worst-cell report), so the probe can never
-    * silently measure a different quantity than the policy enforces.
-    * Keys are the leading path segment (the `ccell=N` directory; a
-    * file at the tier root groups under its own name — a 1-count).
-    */
-  private[graft] def perCellDataFileCounts(
-      fs: org.apache.hadoop.fs.FileSystem,
-      tier: org.apache.hadoop.fs.Path): Map[String, Long] =
-    dataFiles(fs, tier).groupBy(_.takeWhile(_ != '/'))
-      .map { case (cell, fsq) => cell -> fsq.size.toLong }
-
-  /** Probe-facing accumulator: every [[maybeCompact]]-triggered
-    * rewrite records its wall seconds here, so measurement harnesses
-    * (CompactionProbe's long-horizon pricing) can compare rewrite
-    * cost against the trigger budget without instrumenting the
-    * engine inline. Keyed by STORE DIR (round 13): two concurrent
-    * streaming ingests with auto-compaction in one JVM would
-    * otherwise interleave timings, and a probe's drain would
-    * attribute another query's rewrites to the probed store.
-    * Drained (read-and-clear per dir) by the reader; unread entries
-    * cost a few bytes each, nothing else.
-    */
-  object CompactionStats {
-    private val times = new java.util.concurrent.ConcurrentHashMap[
-      String, java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]]()
-    private[search] def record(dir: String, sec: Double): Unit =
-      times.computeIfAbsent(dir, _ =>
-        new java.util.concurrent.ConcurrentLinkedQueue[java.lang.Double]())
-        .add(java.lang.Double.valueOf(sec))
-    def drain(dir: String): Seq[Double] = {
-      val q = times.get(dir)
-      if (q == null) return Seq.empty
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var x = q.poll()
-      while (x != null) { buf += x.doubleValue; x = q.poll() }
-      buf.toSeq
     }
   }
 
@@ -757,7 +692,7 @@ object Pq {
     * stream start from the standing-store size (the [[Scale.exactOk]]
     * pattern): below [[KeyedRerankMinRows]] a flat per-trigger union
     * scan of the store is cheaper than the keyed join's fixed cost
-    * (StreamIngestProbe measures both paths head-to-head — flat wins
+    * (both paths measured head-to-head — flat wins
     * at every corpus this sandbox can hold), above it the pruned scan
     * is the only shape that survives (per-trigger I/O must track
     * probed cells, not the store). A long-lived serving job re-enters
@@ -802,7 +737,7 @@ object Pq {
 
   /** Store size at which [[streamingLookup]]'s exact tier switches
     * from a flat per-trigger union scan to the keyed (ccell-pruned)
-    * join. Measured (StreamIngestProbe, both paths head-to-head on
+    * join. Measured (both paths head-to-head on
     * the same persisted index, queries/s flat vs keyed): 1k corpus
     * 80 vs 59, 3k 204 vs 79, 10k 136 vs 173, 30k 192 vs 204 — the
     * keyed join's per-trigger fixed cost (DPP subquery + one more
@@ -949,7 +884,7 @@ object Pq {
   }
 
   /** The batch path's keyed-rerank bar ([[ivfPqSearch]]). Measured
-    * (BatchRerankProbe, warm minima flat vs keyed on the same cached
+    * (warm minima flat vs keyed on the same cached
     * index, seconds): 2k corpus 0.92 vs 2.28, 20k 0.97 vs 1.07, 60k
     * 1.14 vs 1.24, 200k 1.51 vs 1.35 — the gap collapses with corpus
     * size (flat's scan grows with n while keyed's fixed cost — DPP

@@ -92,7 +92,7 @@ object VideoNearDup {
     * stage.
     *
     * `maxHamming` is the pair-state pressure dial, and its curve is
-    * measured (SWEEP_r13 `stream_hamming_dial`, VideoStreamProbe at
+    * measured (SWEEP_r13 `stream_hamming_dial`, at
     * 1×/10×): the bar gates which frame hits OPEN pair state (the
     * match-frac bar still gates emission), so tightening it prices
     * state, not output — until it starts missing real frames. At the

@@ -1,8 +1,7 @@
 package graft.text
 
-import java.util.concurrent.ConcurrentHashMap
 
-import graft.{QueryDef, Scale, Tables}
+import graft.{QueryDef, StandingState, Tables}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,11 +31,6 @@ object Bpe {
 
   def effMerges(s: SparkSession): Int =
     s.conf.getOption("spark.graft.bpe.merges").map(_.toInt).getOrElse(32)
-
-  // learn-once per (session, dir, merges): Verify runs the query and
-  // its spec gate in one JVM; relearning would double the rounds
-  private val mergeCache =
-    new ConcurrentHashMap[(SparkSession, String, Int), Seq[Merge]]()
 
   /** Distinct-word frequency table `(word, freq)` of a documents
     * table — learning input shape.
@@ -86,13 +80,14 @@ object Bpe {
   }
 
   /** Learn-or-reuse for (session, dir): merges over the sfDir
-    * documents table at the session's configured merge count.
+    * documents table at the session's configured merge count, learned
+    * once per (session, dir, merges) — Verify runs the query and its
+    * spec gate in one JVM, and relearning would double the rounds.
     */
   def mergesFor(s: SparkSession, d: String): Seq[Merge] = {
-    Scale.purgeStopped(mergeCache)
     val n = effMerges(s)
-    mergeCache.computeIfAbsent((s, d, n),
-      _ => learnMerges(wordFreq(Tables.documents(s, d)), n))
+    StandingState(s, ("text.bpeMerges", d, n))(
+      learnMerges(wordFreq(Tables.documents(s, d)), n))
   }
 
   /** One left-to-right pass replacing every adjacent (l, r) with the

@@ -43,4 +43,44 @@ class ContractSpec extends SparkSpec {
     }
     assert(misses.isEmpty, misses.mkString("\n"))
   }
+
+  private def mainSources: Seq[java.nio.file.Path] = {
+    val root = java.nio.file.Paths.get("src", "main", "scala")
+    assert(java.nio.file.Files.isDirectory(root), root.toAbsolutePath)
+    val walk = java.nio.file.Files.walk(root)
+    try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    } finally walk.close()
+  }
+
+  private def read(p: java.nio.file.Path): String =
+    new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+
+  test("every main under src/main is a kept entry point") {
+    // one-off measurement mains rot unreferenced; their results live
+    // in the OPTIMIZATION_* / SWEEP_* records, not as code
+    val keep = Set("Bench", "Verify", "GateRun", "PlanDump", "ScaleSweep",
+      "Doctor", "Demo", "PlanAudit", "StageProbe")
+    val objectDecl = """\bobject\s+(\w+)""".r
+    val mains = mainSources.flatMap { p =>
+      val src = read(p)
+      """\bdef\s+main\s*\(""".r.findAllMatchIn(src).map { m =>
+        objectDecl.findAllMatchIn(src.substring(0, m.start))
+          .map(_.group(1)).toSeq.lastOption.getOrElse(p.toString)
+      }
+    }
+    assert(mains.nonEmpty, "no main found: the scan is broken")
+    val extra = mains.toSet -- keep
+    assert(extra.isEmpty, s"mains outside the keep list: $extra")
+  }
+
+  test("StandingState is the only session cache: no other file keeps " +
+      "a ConcurrentHashMap") {
+    val files = mainSources
+    assert(files.exists(_.endsWith("StandingState.scala")))
+    val others = files.filterNot(_.endsWith("StandingState.scala"))
+      .filter(p => read(p).contains("ConcurrentHashMap"))
+    assert(others.isEmpty, s"hand-rolled caches in: $others")
+  }
 }

@@ -241,16 +241,23 @@ class DedupSpec extends SparkSpec {
     val es = (1 to 500)
       .map(_ => (rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
     val edges = es.toDF("doc_a", "doc_b")
-    val local = Dedup.connectedComponents(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // IntegerType ids take both paths too, and come back as longs
+    val intEdges = edges.select(col("doc_a").cast("int"),
+      col("doc_b").cast("int"))
+    def labels(e: org.apache.spark.sql.DataFrame) =
+      Dedup.connectedComponents(e).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val local = labels(edges)
+    assert(labels(intEdges) == local, "IntegerType local solve diverged")
     spark.conf.set("spark.graft.cc.localSolveLimit", "0")
     try {
-      val dist = Dedup.connectedComponents(edges).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(local == dist,
-        s"local-vs-distributed label diff: ${
-          (local.toSet diff dist.toSet).take(5)} / ${
-          (dist.toSet diff local.toSet).take(5)}")
+      for (input <- Seq(edges, intEdges)) {
+        val dist = labels(input)
+        assert(local == dist,
+          s"local-vs-distributed label diff: ${
+            (local.toSet diff dist.toSet).take(5)} / ${
+            (dist.toSet diff local.toSet).take(5)}")
+      }
     } finally spark.conf.unset("spark.graft.cc.localSolveLimit")
   }
 

@@ -117,8 +117,8 @@ class GraphSpec extends SparkSpec {
     // one hub adjacent to n spokes; spokes form a cycle. A naive
     // wedge enumeration emits C(n,2) pairs at the hub; the oriented
     // plan emits O(n). Exact answers: n triangles, hub in all n,
-    // each spoke in exactly 2 (GraphSkewProbe runs the same graph at
-    // n = 10^6 for the sweep artifact).
+    // each spoke in exactly 2 (the sweep records measured the same
+    // graph at n = 10^6).
     val n = 2000
     val spokes = (1 to n).map(i => (0L, i.toLong))
     val ring = (1 until n).map(i => (i.toLong, i + 1L)) :+ (1L, n.toLong)
