@@ -190,7 +190,7 @@ object Verify {
             s""""item":${facJson(m.itemFactors.orderBy("id"))}}"""
           Seq("q20_als_user_recs", "q22_item_sim_cosine").filter(dirOk)
             .foreach(put(_, "_als_factors.json", body))
-        } catch { case e: Throwable =>
+        } catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[verify] als factors dump failed: " +
             e.getMessage)
         }
@@ -217,7 +217,7 @@ object Verify {
               s"""{"test":$testJson,"combos":[${graft.ml.Recommend
                 .gridCombos(spark)
                 .map(c => comboJson(c._1, c._2)).mkString(",")}]}""")
-        } catch { case e: Throwable =>
+        } catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"[verify] als eval dump failed: " +
             e.getMessage)
         }

@@ -13,7 +13,12 @@ import org.apache.spark.sql.functions._
   *
   *   - M1 ALS train: `mllib.ALS.train(rank=50, iter=5, lambda=0.01)`
   *     (`OfflineRecommender.scala:64-68`) → `ml.recommendation.ALS`
-  *     with a pinned seed and `coldStartStrategy=drop`.
+  *     with a pinned seed and `coldStartStrategy=drop`. mllib leaves
+  *     the block count to `max(defaultParallelism, partitions / 2)`;
+  *     we use `min(10, defaultParallelism)` user and item blocks (10
+  *     is ml.ALS's default). Blocks beyond the task slots only add task
+  *     waves, and q20's user×item block cross product and q22's factor
+  *     cross join square the count.
   *   - J1+P3+A4 user-recs: the reference materializes the full
   *     user×product cartesian grid, predicts, then groupByKey+sort
   *     (`OfflineRecommender.scala:71-84`). We call
@@ -75,9 +80,10 @@ object Recommend {
       r
     }
 
-  private def als: ALS = new ALS()
+  private def als(spark: SparkSession, rank: Int, reg: Double): ALS = new ALS()
     .setUserCol("userId").setItemCol("productId").setRatingCol("score")
-    .setRank(Rank).setMaxIter(MaxIter).setRegParam(RegParam)
+    .setRank(rank).setMaxIter(MaxIter).setRegParam(reg)
+    .setNumBlocks(math.min(10, spark.sparkContext.defaultParallelism))
     .setSeed(42L).setColdStartStrategy("drop")
 
   /** Train-once-per-sfDir (Verify/Bench run several ALS-derived
@@ -86,7 +92,7 @@ object Recommend {
   def model(spark: SparkSession, dir: String): ALSModel = {
     val (rank, reg) = (effRank(spark), effReg(spark))
     StandingState(spark, ("ml.alsModel", dir, rank, reg))(
-      als.setRank(rank).setRegParam(reg).fit(aggRatings(spark, dir)))
+      als(spark, rank, reg).fit(aggRatings(spark, dir)))
   }
 
   /** The shared seed-42 80/20 evaluation split, materialized once per
@@ -114,7 +120,7 @@ object Recommend {
       reg: Double): ALSModel =
     StandingState(spark, ("ml.fitOnSplit", dir, rank, reg)) {
       val (train, _) = evalSplit(spark, dir)
-      als.setRank(rank).setRegParam(reg).fit(train)
+      als(spark, rank, reg).fit(train)
     }
 
   /** M2/A4 — top-20 recommendations per user, flattened flat table

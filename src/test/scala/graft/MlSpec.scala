@@ -2,8 +2,12 @@ package graft
 
 import graft.ml.Recommend
 import graft.sources.DelimitedSource
+import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.ml.recommendation.ALS
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** ML regression gate (SURVEY §5.4): ALS with the reference's
   * production params on the reference's own ratings fixture must reach
@@ -11,6 +15,11 @@ import org.apache.spark.sql.functions._
   * 1.2837 at rank=250 — `ALSTrainer.scala:47`).
   */
 class MlSpec extends SparkSpec {
+
+  // q23's RMSE on planted ratings must stay below this share of the
+  // global-mean baseline's. Measured on local[4]: 0.63 with ml.ALS's
+  // default 10 blocks, 0.64 with 4.
+  private val MaxRmseToBaseline = 0.75
 
   private val refRatings =
     "/root/reference/recommender/DataLoader/src/main/resources/ratings.csv"
@@ -61,6 +70,73 @@ class MlSpec extends SparkSpec {
     val bad = recs.withColumn("prev", lag("score", 1).over(w))
       .filter(col("prev").isNotNull && col("score") > col("prev") + 1e-6)
     assert(bad.isEmpty)
+  }
+
+  test("ALS blocks are capped at the task slots; q20/q22 stages stay within blocks²") {
+    val blocks = math.min(10, spark.sparkContext.defaultParallelism)
+    val models = Seq(Recommend.model(spark, sfTiny),
+      Recommend.fitOnSplit(spark, sfTiny, Recommend.effRank(spark),
+        Recommend.effReg(spark)))
+    for (m <- models; f <- Seq(m.userFactors, m.itemFactors))
+      assert(f.rdd.getNumPartitions == blocks)
+    val widest = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        widest.accumulateAndGet(e.stageInfo.numTasks, math.max)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Recommend.userRecs.fn(spark, sfTiny).collect()
+      Recommend.itemSims.fn(spark, sfTiny).collect()
+      ListenerBridge.drain(spark.sparkContext, 10000L)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(widest.get > 0 && widest.get <= blocks * blocks,
+      s"a q20/q22 stage ran ${widest.get} tasks with $blocks ALS blocks")
+  }
+
+  test("q23 at the production params beats the global-mean baseline on planted ratings") {
+    // A planted rank-3 rating model plus N(0, 0.25) noise on 400
+    // Zipf-active users × 200 products (~20k rows), written as an
+    // `events` table whose `value` folds back to the planted score
+    // through `Tables.ratings`.
+    val (users, rows, rank) = (400, 20000, 3)
+    val rnd = new java.util.Random(7L)
+    def zipf(n: Int, s: Double): () => Int = {
+      val w = Array.tabulate(n)(i => 1.0 / math.pow(i + 1.0, s))
+      val total = w.sum
+      val cdf = w.scanLeft(0.0)(_ + _).tail.map(_ / total)
+      () => {
+        val i = java.util.Arrays.binarySearch(cdf, rnd.nextDouble())
+        math.min(n - 1, if (i >= 0) i else -i - 1)
+      }
+    }
+    val (nextUser, nextProduct) = (zipf(users, 1.0), zipf(Tables.NumProducts, 0.8))
+    val uf = Array.fill(users, rank)(rnd.nextGaussian())
+    val pf = Array.fill(Tables.NumProducts, rank)(rnd.nextGaussian())
+    val events = (0 until rows).map { i =>
+      val (u, p) = (nextUser(), nextProduct())
+      val dot = (0 until rank).map(k => uf(u)(k) * pf(p)(k)).sum / math.sqrt(rank)
+      val score = math.max(0.5, math.min(4.9,
+        math.rint((2.7 + 0.9 * dot + 0.25 * rnd.nextGaussian()) * 10) / 10))
+      Row(i.toLong * Tables.NumProducts + p,
+        new java.sql.Timestamp(1704067200000L + i * 1000L), u.toLong, "view",
+        math.round((score - 0.5) * 100) / 100.0, "{}")
+    }
+    val schema = StructType(Seq(
+      StructField("event_id", LongType), StructField("ts", TimestampType),
+      StructField("user_id", LongType), StructField("event_type", StringType),
+      StructField("value", DoubleType), StructField("props", StringType)))
+    val dir = StandingState.managedTempDir("graft_planted_").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(events, 4), schema)
+      .write.parquet(s"$dir/events.parquet")
+    val rmse = Recommend.alsRmse.fn(spark, dir).head().getDouble(0)
+    val (train, test) = Recommend.evalSplit(spark, dir)
+    val mean = train.agg(avg("score")).head().getDouble(0)
+    val base = math.sqrt(test.agg(avg(pow(col("score") - lit(mean), 2)))
+      .head().getDouble(0))
+    info(f"held-out RMSE $rmse%.4f vs global-mean baseline $base%.4f")
+    assert(rmse < MaxRmseToBaseline * base,
+      f"RMSE $rmse%.4f not below $MaxRmseToBaseline × baseline $base%.4f")
   }
 
   test("quality classifier: held-out AUC >= 0.85, outputs consistent") {
