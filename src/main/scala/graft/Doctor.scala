@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** One-command operability check (r15 verdict stretch item): prints
@@ -99,7 +101,7 @@ object Doctor {
           val n = SparkEntry.queries(name)(spark, sfDir).count()
           if (n > 0) f"OK    rows=$n%-8d" else { failed += 1; "EMPTY " }
         } catch {
-          case e: Throwable =>
+          case NonFatal(e) =>
             failed += 1
             s"FAIL  ${e.getClass.getSimpleName}: " +
               s"${Option(e.getMessage).getOrElse("").take(60)}"
@@ -124,7 +126,7 @@ object Doctor {
           s"${ScaleSweep.ReplicaOffset} (default; " +
             s"k<=${graft.mm.MediaDedup.CopyIdOffset /
               ScaleSweep.ReplicaOffset})"))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       println(s"  (resolved-decision probe failed: ${e.getMessage})")
     }
     println(if (failed == 0) "\ndoctor: all green"

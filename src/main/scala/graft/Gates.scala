@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -628,7 +630,7 @@ object Gates {
     specs.filter(g => only.isEmpty || only(g._1))
       .map { case (query, gate, op, thr, f) =>
         try mk(query, gate, f(s, d), thr, op)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[gates] $query/$gate failed: ${e.getMessage}")
           GateResult(query, gate, Double.NaN, thr, op, pass = false)
         }
@@ -668,7 +670,7 @@ object Gates {
         val p = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
         val out = new String(p.getInputStream.readAllBytes, "UTF-8").trim
         if (p.waitFor() == 0) Some(out) else None
-      } catch { case scala.util.control.NonFatal(_) => None }
+      } catch { case NonFatal(_) => None }
     val sha = sh(Seq("git", "rev-parse", "HEAD")).getOrElse("unknown")
     val dirty = sh(Seq("git", "status", "--porcelain")).exists(_.nonEmpty)
     Seq(

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{GenerateExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
@@ -72,7 +74,7 @@ object PlanAudit {
           // a query whose plan cannot even build here is out of the
           // audit's scope — but its NAME is part of the result, so a
           // coverage hole is visible in the artifact and the spec
-          case e: Throwable =>
+          case NonFatal(e) =>
             System.err.println(s"[audit] $name skipped: " +
               e.toString.takeWhile(_ != '\n').take(120))
             skipped += name

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 /** Dump `.explain("formatted")` for named queries to files — the
   * plan-evidence capture for optimization rounds (plans/rNN/
   * <query>_<tag>.txt). Plans are built against the given dir with the
@@ -27,7 +29,7 @@ object PlanDump {
       val txt =
         try fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
-        catch { case e: Throwable => s"PLAN BUILD FAILED: $e" }
+        catch { case NonFatal(e) => s"PLAN BUILD FAILED: $e" }
       val p = java.nio.file.Paths.get(outDir, s"${name}_$tag.txt")
       java.nio.file.Files.write(p, txt.getBytes("UTF-8"))
       println(s"wrote $p (${txt.length} chars)")

@@ -1,4 +1,7 @@
 package graft
+
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -27,7 +30,7 @@ object Verify {
     SparkEntry.queries.filter(q => wanted(q._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -61,7 +64,7 @@ object Verify {
           Paths.get(s"$outDir/q109_bpe_tokens/_merges.json"),
           s"""{"requested":${graft.text.Bpe.effMerges(spark)},""" +
             s""""merges":[$body]}""")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] q109 merges dump failed: " +
           e.getMessage)
       }
@@ -83,7 +86,7 @@ object Verify {
         Files.writeString(
           Paths.get(s"$outDir/q73_semdedup/_centroids.json"),
           s"""{"k":${cs.length},"tau":$tau,"centroids":[$body]}""")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] q73 centroids dump failed: " +
           e.getMessage)
       }
@@ -134,7 +137,7 @@ object Verify {
             Tables.embeddings(spark, sfDir))
           val body = ivfJson(idx)
           ivfDirs.foreach(n => put(n, "_ivf_index.json", body))
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] ivf index dump failed: " +
             e.getMessage)
         }
@@ -146,7 +149,7 @@ object Verify {
           val (_, books) = graft.search.Pq.indexFor(spark, sfDir)
           val body = pqJson(books)
           pqDirs.foreach(n => put(n, "_pq_books.json", body))
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] pq books dump failed: " +
             e.getMessage)
         }
@@ -163,7 +166,7 @@ object Verify {
             spark, sfDir, "mod10", corpus)
           put("q139_ivfpq_incremental", "_ivf_index.json", ivfJson(idx))
           put("q139_ivfpq_incremental", "_pq_books.json", pqJson(books))
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] q139 index dump failed: " +
             e.getMessage)
         }
@@ -190,7 +193,7 @@ object Verify {
             s""""item":${facJson(m.itemFactors.orderBy("id"))}}"""
           Seq("q20_als_user_recs", "q22_item_sim_cosine").filter(dirOk)
             .foreach(put(_, "_als_factors.json", body))
-        } catch { case scala.util.control.NonFatal(e) =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] als factors dump failed: " +
             e.getMessage)
         }
@@ -217,7 +220,7 @@ object Verify {
               s"""{"test":$testJson,"combos":[${graft.ml.Recommend
                 .gridCombos(spark)
                 .map(c => comboJson(c._1, c._2)).mkString(",")}]}""")
-        } catch { case scala.util.control.NonFatal(e) =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[verify] als eval dump failed: " +
             e.getMessage)
         }
@@ -241,7 +244,7 @@ object Verify {
             s""""intercept":${m.intercept},""" +
             s""""label_threshold":${graft.ml.QualityModel.LabelThreshold},""" +
             s""""stopwords":[$sw]}""")
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] q77 model dump failed: " +
           e.getMessage)
       }
@@ -262,7 +265,7 @@ object Verify {
       if (wanted(name) && new java.io.File(s"$outDir/$name").isDirectory)
         try Files.writeString(Paths.get(s"$outDir/$name/$file"),
           s"{$header,\"rows\":[" + rows.mkString(",") + "]}")
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name fingerprint dump " +
             s"failed: ${e.getMessage}")
         }
@@ -311,7 +314,7 @@ object Verify {
     val approx = SparkEntry.allDefs
       .filter(qd => qd.oracle.isDefined && {
         try qd.isApproximateFor(spark, sfDir)
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(
             s"[verify] ${qd.name} approx check failed: ${e.getMessage}")
           false
@@ -335,7 +338,7 @@ object Verify {
       val gates = Gates.all(spark, sfDir)
       Gates.writeJson(gates, s"$outDir/specgates.json", sfDir)
       try Gates.writeJson(gates, "SPECGATES.json", sfDir)
-      catch { case e: Throwable =>
+      catch { case NonFatal(e) =>
         System.err.println(s"[gates] cwd write failed: ${e.getMessage}")
       }
       val failed = gates.filterNot(_.pass)

@@ -1,12 +1,15 @@
 package graft.ml
 
 import graft.{QueryDef, Scale, StandingState, Tables}
+import graft.functions.CosineSimilarity
 import graft.functions.VectorFunctions.cosine_sim
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The reference's offline recommender (`OfflineRecommender.scala`,
   * `ALSTrainer.scala`) rebuilt on the DataFrame ML API:
@@ -21,17 +24,20 @@ import org.apache.spark.sql.functions._
   *     cross join square the count.
   *   - J1+P3+A4 user-recs: the reference materializes the full
   *     user×product cartesian grid, predicts, then groupByKey+sort
-  *     (`OfflineRecommender.scala:71-84`). We call
-  *     `recommendForAllUsers(20)` — blocked BLAS top-k that never
-  *     materializes the grid; this is THE scale-critical rewrite
+  *     (`OfflineRecommender.scala:71-84`). While |U|×|P| is within
+  *     [[graft.Scale.exactPairLimit]] we score that grid on the
+  *     driver from a collected copy of the factors: a small grid costs
+  *     microseconds of arithmetic but several jobs of scheduling.
+  *     Above it, `recommendForAllUsers(20)` — blocked BLAS top-k that
+  *     never materializes the grid; this is THE scale-critical rewrite
   *     (100 TB: grid is |U|×|P| rows, top-k is |U|×k).
   *   - J2+P5+A5 item-item similarity: cartesian self-join of latent
   *     factors + jblas cosine (`OfflineRecommender.scala:94-116`) →
-  *     cross join over `itemFactors` with the codegen'd
-  *     [[graft.functions.CosineSimilarity]] expression, threshold
-  *     0.6 (`OfflineRecommender.scala:105`), windowed top-20 per
-  *     product. For catalogs where n² is infeasible the LSH path in
-  *     `graft.search.Ann` replaces the cross join.
+  *     the [[graft.functions.CosineSimilarity]] arithmetic, threshold
+  *     0.6 (`OfflineRecommender.scala:105`), top-20 per product. On
+  *     the driver while |P|² is within the same limit; a cross join
+  *     over `itemFactors` with the codegen'd expression and a window
+  *     while |P| is; the LSH band join of `graft.dedup.Dedup` above.
   *   - M4-M6 RMSE evaluation: 80/20 split + grid search
   *     (`ALSTrainer.scala:41-79`) → `RegressionEvaluator("rmse")`.
   *
@@ -123,20 +129,118 @@ object Recommend {
       als(spark, rank, reg).fit(train)
     }
 
+  private type Factors = Array[(Int, Array[Float])]
+
+  /** Driver-side copies of one fitted model's factor tables, each as
+    * `(id, features)` sorted by id. Building the holder runs nothing;
+    * the sizes take one job; a table is collected at most once, and only
+    * by a caller whose bound check has said its pair grid fits.
+    */
+  private final class LocalFactors(m: ALSModel) {
+    private var users, items: Factors = _ // guarded by this
+
+    /** (|users|, |items|), counted in one single-stage job. */
+    lazy val sizes: (Long, Long) =
+      tables(user = true, item = true).rdd
+        .map(r => if (r.getBoolean(0)) (1L, 0L) else (0L, 1L))
+        .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
+
+    /** Both tables; call only once |users| × |items| is within bounds. */
+    def grid: (Factors, Factors) = fetch(user = true)
+
+    /** The item table; call only once |items|² is within bounds. */
+    def itemTable: Factors = fetch(user = false)._2
+
+    // one job collects whichever wanted tables are not here yet
+    private def fetch(user: Boolean): (Factors, Factors) = synchronized {
+      val (wantU, wantI) = (user && users == null, items == null)
+      if (wantU || wantI) {
+        val (u, i) = tables(wantU, wantI).collect().partition(_.getBoolean(0))
+        def sorted(rows: Array[Row]): Factors =
+          rows.map(r => (r.getInt(1), r.getSeq[Float](2).toArray)).sortBy(_._1)
+        if (wantU) users = sorted(u)
+        if (wantI) items = sorted(i)
+      }
+      (users, items)
+    }
+
+    // `(user, id, features)`; a side not asked for is pruned from the plan
+    private def tables(user: Boolean, item: Boolean): DataFrame = {
+      def side(f: DataFrame, isUser: Boolean, keep: Boolean) =
+        f.where(lit(keep)).select(lit(isUser).as("user"), col("id"), col("features"))
+      side(m.userFactors, isUser = true, user)
+        .union(side(m.itemFactors, isUser = false, item))
+    }
+  }
+
+  private def localFactors(s: SparkSession, d: String): LocalFactors = {
+    val (rank, reg) = (effRank(s), effReg(s))
+    StandingState(s, ("ml.localFactors", d, rank, reg))(
+      new LocalFactors(model(s, d)))
+  }
+
+  // The local paths' schemas: exactly the distributed plans' (MlSpec
+  // compares them).
+  private val UserRecsSchema = StructType(Seq(
+    StructField("user_id", LongType, nullable = false),
+    StructField("rank", IntegerType, nullable = false),
+    StructField("product_id", LongType),
+    StructField("score", DoubleType)))
+  private val ItemSimsSchema = StructType(Seq(
+    StructField("product_id", LongType, nullable = false),
+    StructField("sim_product_id", LongType, nullable = false),
+    StructField("sim", DoubleType),
+    StructField("rank", IntegerType, nullable = false)))
+
   /** M2/A4 — top-20 recommendations per user, flattened flat table
-    * `(user_id, rank, product_id, score)` for stable row output.
+    * `(user_id, rank, product_id, score)` for stable row output. Scored
+    * on the driver while |users| × |items| is within
+    * [[Scale.exactPairLimit]], by `recommendForAllUsers` above it.
     */
   val userRecs: QueryDef = QueryDef.rowsOnly("q20_als_user_recs") {
     (s, d) =>
-      model(s, d).recommendForAllUsers(TopK)
-        .select(col("userId"),
-          posexplode(col("recommendations")).as(Seq("pos", "rec")))
-        .select(
-          col("userId").cast("long").as("user_id"),
-          (col("pos") + 1).as("rank"),
-          col("rec.productId").cast("long").as("product_id"),
-          col("rec.rating").cast("double").as("score"))
-        .orderBy("user_id", "rank")
+      val local = localFactors(s, d)
+      if (Scale.exactOk(s, s"$d#userItemPairs",
+          local.sizes._1 * local.sizes._2)) {
+        val (users, items) = local.grid
+        localUserRecs(s, users, items)
+      } else
+        model(s, d).recommendForAllUsers(TopK)
+          .select(col("userId"),
+            posexplode(col("recommendations")).as(Seq("pos", "rec")))
+          .select(
+            col("userId").cast("long").as("user_id"),
+            (col("pos") + 1).as("rank"),
+            col("rec.productId").cast("long").as("product_id"),
+            col("rec.rating").cast("double").as("score"))
+          .orderBy("user_id", "rank")
+  }
+
+  /** q20 on the driver: f32 dot products accumulated in rank order (the
+    * `recommendForAllUsers` score up to its BLAS lane order), top-K per
+    * user by (score desc, product id asc), as a local relation already
+    * in (user_id, rank) order — a sort over it would still submit jobs.
+    */
+  private def localUserRecs(s: SparkSession, users: Factors,
+      items: Factors): DataFrame = {
+    val rows = new java.util.ArrayList[Row]()
+    val scores = new Array[Float](items.length)
+    for ((uid, u) <- users) {
+      for (j <- items.indices) {
+        val v = items(j)._2
+        var acc = 0f
+        var k = 0
+        while (k < u.length) { acc += u(k) * v(k); k += 1 }
+        scores(j) = acc
+      }
+      // a stable sort over id-ordered items breaks ties by id
+      items.indices.sortWith(scores(_) > scores(_)).take(TopK).zipWithIndex
+        .foreach { case (j, r) =>
+          rows.add(Row(uid.toLong, r + 1, items(j)._1.toLong,
+            scores(j).toDouble))
+        }
+    }
+    s.createDataFrame(rows, UserRecsSchema)
   }
 
   /** M3 — latent item factors `(product_id, dim, weight)`. */
@@ -152,43 +256,76 @@ object Recommend {
   }
 
   /** J2/P4/P5/A5/F2 — item-item cosine similarity matrix, threshold
-    * 0.6, top-20 per product. Exact path: n×n cross join with the
-    * codegen'd cosine expression (fine to ~10⁴ items; beyond that the
-    * LSH approxSimilarityJoin in `graft.search.Ann` is the plan).
+    * 0.6, top-20 per product. Three regimes by catalog size n:
+    * n² within [[Scale.exactPairLimit]] scores on the driver; n within
+    * it runs an n×n cross join with the codegen'd cosine expression;
+    * above that the LSH band join of `graft.dedup.Dedup` supplies the
+    * candidate pairs.
     */
   val itemSims: QueryDef = QueryDef.rowsOnly("q22_item_sim_cosine") {
     (s, d) =>
-      val f = model(s, d).itemFactors
-        .select(col("id"), col("features"))
-      val w = Window.partitionBy("product_id")
-        .orderBy(desc("sim"), asc("sim_product_id"))
-      val pairPool =
-        if (Scale.exactOk(s, s"$d#itemFactors", f.count())) {
-          val a = f.select(col("id").as("pid_a"), col("features").as("fa"))
-          val b = f.select(col("id").as("pid_b"), col("features").as("fb"))
-          a.crossJoin(b).filter(col("pid_a") =!= col("pid_b"))
-        } else
-          // catalog too big for n²: hyperplane-banded candidates
-          // (both directions — the sim matrix is consumed per-row),
-          // factor vectors re-attached by key after the band join;
-          // results above the limit are approximate by design
-          graft.dedup.Dedup
-            .lshCosinePairsConf(f, "id", "features", symmetric = true)
-            .join(f.select(col("id").as("id_a"), col("features").as("fa")),
-              "id_a")
-            .join(f.select(col("id").as("id_b"), col("features").as("fb")),
-              "id_b")
-            .select(col("id_a").as("pid_a"), col("fa"),
-              col("id_b").as("pid_b"), col("fb"))
-      pairPool
-        .select(
-          col("pid_a").cast("long").as("product_id"),
-          col("pid_b").cast("long").as("sim_product_id"),
-          round(cosine_sim(col("fa"), col("fb")), 6).as("sim"))
-        .filter(col("sim") > SimThreshold)
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= TopK)
-        .orderBy("product_id", "rank")
+      val local = localFactors(s, d)
+      val n = local.sizes._2
+      if (Scale.exactOk(s, s"$d#itemPairs", n * n))
+        localItemSims(s, local.itemTable)
+      else {
+        val f = model(s, d).itemFactors
+          .select(col("id"), col("features"))
+        val w = Window.partitionBy("product_id")
+          .orderBy(desc("sim"), asc("sim_product_id"))
+        val pairPool =
+          if (Scale.exactOk(s, s"$d#itemFactors", n)) {
+            val a = f.select(col("id").as("pid_a"), col("features").as("fa"))
+            val b = f.select(col("id").as("pid_b"), col("features").as("fb"))
+            a.crossJoin(b).filter(col("pid_a") =!= col("pid_b"))
+          } else
+            // catalog too big for n²: hyperplane-banded candidates
+            // (both directions — the sim matrix is consumed per-row),
+            // factor vectors re-attached by key after the band join;
+            // results above the limit are approximate by design
+            graft.dedup.Dedup
+              .lshCosinePairsConf(f, "id", "features", symmetric = true)
+              .join(f.select(col("id").as("id_a"), col("features").as("fa")),
+                "id_a")
+              .join(f.select(col("id").as("id_b"), col("features").as("fb")),
+                "id_b")
+              .select(col("id_a").as("pid_a"), col("fa"),
+                col("id_b").as("pid_b"), col("fb"))
+        pairPool
+          .select(
+            col("pid_a").cast("long").as("product_id"),
+            col("pid_b").cast("long").as("sim_product_id"),
+            round(cosine_sim(col("fa"), col("fb")), 6).as("sim"))
+          .filter(col("sim") > SimThreshold)
+          .withColumn("rank", row_number().over(w))
+          .filter(col("rank") <= TopK)
+          .orderBy("product_id", "rank")
+      }
+  }
+
+  /** q22 on the driver: the cosine expression's own arithmetic,
+    * rounded half-up to 6 places as Spark's `round` rounds a double,
+    * kept above the threshold, top-K per product by (sim desc, id
+    * asc), as a local relation already in (product_id, rank) order.
+    */
+  private def localItemSims(s: SparkSession, items: Factors): DataFrame = {
+    val vecs = items.map(i => UnsafeArrayData.fromPrimitiveArray(i._2))
+    val rows = new java.util.ArrayList[Row]()
+    for (a <- items.indices) {
+      val sims = for {
+        b <- items.indices if b != a
+        cos = CosineSimilarity.cosine(vecs(a), vecs(b))
+        sim = java.math.BigDecimal.valueOf(cos)
+          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+        if sim > SimThreshold
+      } yield (b, sim)
+      // a stable sort over id-ordered items breaks ties by id
+      sims.sortWith(_._2 > _._2).take(TopK).zipWithIndex
+        .foreach { case ((b, sim), r) =>
+          rows.add(Row(items(a)._1.toLong, items(b)._1.toLong, sim, r + 1))
+        }
+    }
+    s.createDataFrame(rows, ItemSimsSchema)
   }
 
   /** M4-M6 — held-out RMSE of the production params on an 80/20

@@ -4,8 +4,11 @@ import graft.ml.Recommend
 import graft.sources.DelimitedSource
 import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.ml.recommendation.ALS
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
-import org.apache.spark.sql.Row
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageSubmitted}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.Cross
+import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -86,12 +89,65 @@ class MlSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      Recommend.userRecs.fn(spark, sfTiny).collect()
-      Recommend.itemSims.fn(spark, sfTiny).collect()
+      // a low bound keeps q20/q22 on the block cross product and the
+      // factor cross join, the plans whose width this measures
+      withPairLimit(1000) {
+        Recommend.userRecs.fn(spark, sfTiny).collect()
+        Recommend.itemSims.fn(spark, sfTiny).collect()
+      }
       ListenerBridge.drain(spark.sparkContext, 10000L)
     } finally spark.sparkContext.removeSparkListener(listener)
     assert(widest.get > 0 && widest.get <= blocks * blocks,
       s"a q20/q22 stage ran ${widest.get} tasks with $blocks ALS blocks")
+  }
+
+  private def withPairLimit[T](limit: Long)(body: => T): T = {
+    spark.conf.set("spark.graft.exactPairLimit", limit)
+    try body finally spark.conf.unset("spark.graft.exactPairLimit")
+  }
+
+  private def isLocal(df: DataFrame) =
+    df.queryExecution.analyzed.isInstanceOf[LocalRelation]
+
+  test("q20/q22 on the driver equal their distributed plans; a warm q22 runs no job") {
+    val (recs, sims) = (Recommend.userRecs.fn(spark, sfTiny),
+      Recommend.itemSims.fn(spark, sfTiny))
+    // q22 stays on the exact cross join under the low bound
+    val (dRecs, dSims) = withPairLimit(1000) {
+      val (r, q) = (Recommend.userRecs.fn(spark, sfTiny),
+        Recommend.itemSims.fn(spark, sfTiny))
+      assert(!isLocal(r) && !isLocal(q))
+      assert(q.queryExecution.analyzed.exists {
+        case j: Join => j.joinType == Cross
+        case _ => false
+      })
+      (r, q)
+    }
+    assert(isLocal(recs) && isLocal(sims))
+    assert(recs.schema == dRecs.schema)
+    assert(sims.schema == dSims.schema)
+    assert(sims.collect().toSeq == dSims.collect().toSeq)
+    val (got, want) = (recs.collect(), dRecs.collect())
+    assert(got.length == want.length && got.nonEmpty)
+    for ((g, w) <- got.zip(want)) {
+      assert((0 to 2).map(g.get) == (0 to 2).map(w.get), s"$g vs $w")
+      val (a, b) = (g.getDouble(3), w.getDouble(3))
+      assert(math.abs(a - b) <= 1e-5 * math.max(math.abs(b), 1.0),
+        s"score $g vs $w")
+    }
+
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    ListenerBridge.drain(spark.sparkContext, 10000L)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Recommend.itemSims.fn(spark, sfTiny).collect()
+      ListenerBridge.drain(spark.sparkContext, 10000L)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get == 0, s"a warm q22 submitted ${jobs.get} jobs")
   }
 
   test("q23 at the production params beats the global-mean baseline on planted ratings") {
