@@ -36,8 +36,8 @@ object Gates {
 
   /** The reference's own ratings fixture — the one dataset with real
     * collaborative structure, hence the one place an absolute ALS
-    * RMSE bound means something (MlSpec's gate; reference recorded
-    * 1.2837 best — `ALSTrainer.scala:47`).
+    * RMSE bound means something (reference recorded 1.2837 best —
+    * `ALSTrainer.scala:47`).
     */
   val RefRatings =
     "/root/reference/recommender/DataLoader/src/main/resources/ratings.csv"

@@ -46,6 +46,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // The selected query names, so tools/check.py expects replays only
+    // from queries this run was asked to dump.
+    Files.writeString(Paths.get(s"$outDir/selected.json"),
+      SparkEntry.queries.keys.filter(wanted).toSeq.sorted.map(q)
+        .mkString("[", ",", "]"))
     // q109 replay side output (r14 verdict item 3): BPE is iterative
     // and can never get a DuckDB oracle, but greedy BPE is a pure
     // function of the corpus — drop the learned merge table next to

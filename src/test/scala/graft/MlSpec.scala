@@ -12,10 +12,11 @@ import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** ML regression gate (SURVEY §5.4): ALS with the reference's
-  * production params on the reference's own ratings fixture must reach
-  * the BASELINE.md quality bar (RMSE ≤ 1.35; the reference recorded
-  * 1.2837 at rank=250 — `ALSTrainer.scala:47`).
+/** ML regression gate (SURVEY §5.4): ALS with tuned production params
+  * on planted ratings must reach a fixed RMSE bar with the same slack
+  * the reference's bar had over its measured RMSE (1.35 over 1.11), and
+  * beat the global-mean baseline. Every fixture here is generated or
+  * inline; none is read from outside the repo and its testdata.
   */
 class MlSpec extends SparkSpec {
 
@@ -24,35 +25,101 @@ class MlSpec extends SparkSpec {
   // default 10 blocks, 0.64 with 4.
   private val MaxRmseToBaseline = 0.75
 
-  private val refRatings =
-    "/root/reference/recommender/DataLoader/src/main/resources/ratings.csv"
+  // The ALS gate's bar on planted ratings. Measured on local[4]: RMSE
+  // 0.671 against a global-mean baseline of 0.827 (seed-42 split). 0.81
+  // is 1.21× the measured RMSE, within the reference bar's 1.35 / 1.11
+  // ≈ 1.22 slack, and below the baseline.
+  private val MaxPlantedRmse = 0.81
 
-  test("ALS on reference ratings.csv meets the RMSE quality gate") {
-    val ratings = DelimitedSource.ratings(spark, refRatings)
+  /** A planted rank-3 rating model plus N(0, 0.25) noise on 400
+    * Zipf-active users × 200 products (~20k rows), written once as an
+    * `events` table whose `value` folds back to the planted score
+    * through `Tables.ratings`.
+    */
+  private lazy val plantedDir: String = {
+    val (users, rows, rank) = (400, 20000, 3)
+    val rnd = new java.util.Random(7L)
+    def zipf(n: Int, s: Double): () => Int = {
+      val w = Array.tabulate(n)(i => 1.0 / math.pow(i + 1.0, s))
+      val total = w.sum
+      val cdf = w.scanLeft(0.0)(_ + _).tail.map(_ / total)
+      () => {
+        val i = java.util.Arrays.binarySearch(cdf, rnd.nextDouble())
+        math.min(n - 1, if (i >= 0) i else -i - 1)
+      }
+    }
+    val (nextUser, nextProduct) = (zipf(users, 1.0), zipf(Tables.NumProducts, 0.8))
+    val uf = Array.fill(users, rank)(rnd.nextGaussian())
+    val pf = Array.fill(Tables.NumProducts, rank)(rnd.nextGaussian())
+    val events = (0 until rows).map { i =>
+      val (u, p) = (nextUser(), nextProduct())
+      val dot = (0 until rank).map(k => uf(u)(k) * pf(p)(k)).sum / math.sqrt(rank)
+      val score = math.max(0.5, math.min(4.9,
+        math.rint((2.7 + 0.9 * dot + 0.25 * rnd.nextGaussian()) * 10) / 10))
+      Row(i.toLong * Tables.NumProducts + p,
+        new java.sql.Timestamp(1704067200000L + i * 1000L), u.toLong, "view",
+        math.round((score - 0.5) * 100) / 100.0, "{}")
+    }
+    val schema = StructType(Seq(
+      StructField("event_id", LongType), StructField("ts", TimestampType),
+      StructField("user_id", LongType), StructField("event_type", StringType),
+      StructField("value", DoubleType), StructField("props", StringType)))
+    val dir = StandingState.managedTempDir("graft_planted_").toString
+    spark.createDataFrame(spark.sparkContext.parallelize(events, 4), schema)
+      .write.parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  /** RMSE of predicting `train`'s mean score for every `test` rating. */
+  private def globalMeanRmse(train: DataFrame, test: DataFrame): Double = {
+    val mean = train.agg(avg("score")).head().getDouble(0)
+    math.sqrt(test.agg(avg(pow(col("score") - lit(mean), 2)))
+      .head().getDouble(0))
+  }
+
+  test("ALS on planted ratings meets the RMSE quality gate") {
+    val ratings = Tables.ratings(spark, plantedDir)
       .select("userId", "productId", "score")
     val Array(train, test) = ratings.randomSplit(Array(0.8, 0.2), seed = 42L)
     // The reference's production params (rank=50, lambda=0.01, 5 iters,
     // `OfflineRecommender.scala:66`) under ml.ALS's lambda semantics
-    // overfit to RMSE≈2.06; tuned regularization reaches 1.11, beating
-    // the reference's best recorded 1.2837 (`ALSTrainer.scala:47`).
+    // overfit; this is the tuned regularization the gate holds.
     val m = new ALS()
       .setUserCol("userId").setItemCol("productId").setRatingCol("score")
       .setRank(50).setMaxIter(10).setRegParam(0.3)
       .setSeed(42L).setColdStartStrategy("drop")
       .fit(train)
-    val rmse = Recommend.evaluateRmse(m, test)
-    info(s"held-out RMSE = $rmse (reference best: 1.2837)")
-    assert(rmse <= 1.35, s"RMSE $rmse above the 1.35 quality gate")
+    val (rmse, base) = (Recommend.evaluateRmse(m, test),
+      globalMeanRmse(train, test))
+    info(f"held-out RMSE $rmse%.4f vs global-mean baseline $base%.4f")
+    assert(rmse <= MaxPlantedRmse,
+      f"RMSE $rmse%.4f above the $MaxPlantedRmse quality gate")
+    assert(rmse < base, f"RMSE $rmse%.4f not below baseline $base%.4f")
   }
 
-  test("reference products.csv parses with array categories/tags") {
-    val p = DelimitedSource.products(spark,
-      "/root/reference/recommender/DataLoader/src/main/resources/products.csv")
-    assert(p.count() == 96)
+  test("products fixture parses with array categories/tags") {
+    // `DataLoader.scala:40-43`'s layout: 7 `^`-separated fields, with
+    // `|`-joined categories and tags in the last two
+    val lines = Seq(
+      "3982^ Wireless Mouse (green) ^1057,1062,564^B009EJN4T2^" +
+        "https://img.example/3982.jpg^Peripherals|Mice|Office^mouse|quiet",
+      "13316^Notebook^1180^B00CQ8OQG6^https://img.example/13316.jpg^" +
+        "Stationery^paper|a5|lined",
+      "259637^Desk Lamp^1163,1165^B0087RJQNI^https://img.example/259637.jpg^" +
+        "Home|Lighting^lamp")
+    val path = StandingState.managedTempDir("graft_products_")
+      .resolve("products.csv")
+    java.nio.file.Files.write(path, lines.mkString("\n").getBytes("UTF-8"))
+    val p = DelimitedSource.products(spark, path.toString)
+    assert(p.count() == 3)
     assert(p.filter(col("productId").isNull).isEmpty)
     val r = p.orderBy("productId").head
-    assert(r.getAs[scala.collection.Seq[String]]("categories").nonEmpty)
-    assert(r.getAs[scala.collection.Seq[String]]("tags").nonEmpty)
+    assert(r.getAs[Int]("productId") == 3982)
+    assert(r.getAs[String]("name") == "Wireless Mouse (green)")
+    assert(r.getAs[String]("imageUrl") == "https://img.example/3982.jpg")
+    assert(r.getAs[scala.collection.Seq[String]]("categories") ==
+      Seq("Peripherals", "Mice", "Office"))
+    assert(r.getAs[scala.collection.Seq[String]]("tags") == Seq("mouse", "quiet"))
   }
 
   test("item similarity matrix: threshold + top-k bounds hold") {
@@ -151,45 +218,9 @@ class MlSpec extends SparkSpec {
   }
 
   test("q23 at the production params beats the global-mean baseline on planted ratings") {
-    // A planted rank-3 rating model plus N(0, 0.25) noise on 400
-    // Zipf-active users × 200 products (~20k rows), written as an
-    // `events` table whose `value` folds back to the planted score
-    // through `Tables.ratings`.
-    val (users, rows, rank) = (400, 20000, 3)
-    val rnd = new java.util.Random(7L)
-    def zipf(n: Int, s: Double): () => Int = {
-      val w = Array.tabulate(n)(i => 1.0 / math.pow(i + 1.0, s))
-      val total = w.sum
-      val cdf = w.scanLeft(0.0)(_ + _).tail.map(_ / total)
-      () => {
-        val i = java.util.Arrays.binarySearch(cdf, rnd.nextDouble())
-        math.min(n - 1, if (i >= 0) i else -i - 1)
-      }
-    }
-    val (nextUser, nextProduct) = (zipf(users, 1.0), zipf(Tables.NumProducts, 0.8))
-    val uf = Array.fill(users, rank)(rnd.nextGaussian())
-    val pf = Array.fill(Tables.NumProducts, rank)(rnd.nextGaussian())
-    val events = (0 until rows).map { i =>
-      val (u, p) = (nextUser(), nextProduct())
-      val dot = (0 until rank).map(k => uf(u)(k) * pf(p)(k)).sum / math.sqrt(rank)
-      val score = math.max(0.5, math.min(4.9,
-        math.rint((2.7 + 0.9 * dot + 0.25 * rnd.nextGaussian()) * 10) / 10))
-      Row(i.toLong * Tables.NumProducts + p,
-        new java.sql.Timestamp(1704067200000L + i * 1000L), u.toLong, "view",
-        math.round((score - 0.5) * 100) / 100.0, "{}")
-    }
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val dir = StandingState.managedTempDir("graft_planted_").toString
-    spark.createDataFrame(spark.sparkContext.parallelize(events, 4), schema)
-      .write.parquet(s"$dir/events.parquet")
-    val rmse = Recommend.alsRmse.fn(spark, dir).head().getDouble(0)
-    val (train, test) = Recommend.evalSplit(spark, dir)
-    val mean = train.agg(avg("score")).head().getDouble(0)
-    val base = math.sqrt(test.agg(avg(pow(col("score") - lit(mean), 2)))
-      .head().getDouble(0))
+    val rmse = Recommend.alsRmse.fn(spark, plantedDir).head().getDouble(0)
+    val (train, test) = Recommend.evalSplit(spark, plantedDir)
+    val base = globalMeanRmse(train, test)
     info(f"held-out RMSE $rmse%.4f vs global-mean baseline $base%.4f")
     assert(rmse < MaxRmseToBaseline * base,
       f"RMSE $rmse%.4f not below $MaxRmseToBaseline × baseline $base%.4f")
