@@ -27,20 +27,12 @@ final case class GateResult(query: String, gate: String, value: Double,
   * the spec suite agreeing.
   *
   * Gates follow two shapes: a MEASURED BOUND (recall ≥ 0.8, RMSE ≤
-  * 1.35, sketch error within sigma) where approximation quality is
+  * 0.81, sketch error within sigma) where approximation quality is
   * the contract, and a VIOLATION COUNT ≤ 0 where an exact structural
   * invariant (every doc labeled once, zero bloom false negatives,
   * incremental == full restricted) is the contract.
   */
 object Gates {
-
-  /** The reference's own ratings fixture — the one dataset with real
-    * collaborative structure, hence the one place an absolute ALS
-    * RMSE bound means something (reference recorded 1.2837 best —
-    * `ALSTrainer.scala:47`).
-    */
-  val RefRatings =
-    "/root/reference/recommender/DataLoader/src/main/resources/ratings.csv"
 
   private def mk(query: String, gate: String, value: Double,
       threshold: Double, op: String): GateResult = {
@@ -96,23 +88,10 @@ object Gates {
       // reference's production params measures 1.87 RMSE vs a 1.23
       // global-mean baseline at sf0.01), so an absolute RMSE bound
       // there gates the DATA, not the operator. Quality is gated where
-      // quality is measurable — MlSpec's bound on the reference's own
-      // ratings fixture — and the sfDir grid is gated structurally.
-      ("q23_als_rmse", "reference_fixture_rmse", "<=", 1.35,
-        (s, d) => {
-          import org.apache.spark.ml.recommendation.ALS
-          val ratings = sources.DelimitedSource.ratings(s, RefRatings)
-            .select("userId", "productId", "score")
-          val Array(train, test) =
-            ratings.randomSplit(Array(0.8, 0.2), seed = 42L)
-          val m = new ALS()
-            .setUserCol("userId").setItemCol("productId")
-            .setRatingCol("score")
-            .setRank(50).setMaxIter(10).setRegParam(0.3)
-            .setSeed(42L).setColdStartStrategy("drop")
-            .fit(train)
-          ml.Recommend.evaluateRmse(m, test)
-        }),
+      // quality is measurable — on planted ratings, MlSpec's bound —
+      // and the sfDir grid is gated structurally.
+      ("q23_als_rmse", "planted_ratings_rmse", "<=", ml.Planted.MaxRmse,
+        (s, _) => ml.Planted.heldOutRmse(s)._1),
       ("q24_als_grid_search", "grid_structure_violations", "<=", 0.0,
         (s, d) => {
           // default 2x2 grid; searching must never lose to not

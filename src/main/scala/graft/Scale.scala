@@ -56,8 +56,9 @@ object Scale {
   /** Max input rows for which an exact all-pairs (cross-join) plan is
     * allowed; above it operators switch to their LSH/banded variant.
     * It also bounds the pairs q20 and q22 score on the driver from
-    * collected ALS factors (|users|×|items| and |items|²). Override per
-    * session with `spark.graft.exactPairLimit`.
+    * collected ALS factors (|users|×|items| and |items|²), and the
+    * ratings (one user×item pair each) of an ALS fit replayed on the
+    * driver. Override per session with `spark.graft.exactPairLimit`.
     */
   val DefaultExactPairLimit = 100000L
 

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * train-once / broadcast-once discipline, written down once.
   *
   * A key is a tuple whose first element names its cache (e.g.
-  * `("ml.alsModel", dir, rank, reg)`); the session is part of every
+  * `("ml.alsModel", dir, rank, reg, limit)`); the session is part of every
   * key because a cached DataFrame or model is bound to the session
   * that built it. One lifecycle for every entry:
   *  - entries whose session's context has stopped are purged on the

@@ -5,6 +5,7 @@ import graft.functions.CosineSimilarity
 import graft.functions.VectorFunctions.cosine_sim
 import org.apache.spark.ml.evaluation.RegressionEvaluator
 import org.apache.spark.ml.recommendation.{ALS, ALSModel}
+import org.apache.spark.ml.recommendation.graft.AlsBridge
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.expressions.Window
@@ -21,12 +22,17 @@ import org.apache.spark.sql.types._
   *     we use `min(10, defaultParallelism)` user and item blocks (10
   *     is ml.ALS's default). Blocks beyond the task slots only add task
   *     waves, and q20's user×item block cross product and q22's factor
-  *     cross join square the count.
+  *     cross join square the count. While the deduplicated ratings fit
+  *     [[graft.Scale.exactPairLimit]] (each rating is one user×item
+  *     pair) the same algorithm replays on the driver with Spark's own
+  *     solver (`AlsBridge`): a 9k-rating model is about 20 stages of
+  *     scheduling but a fraction of a second of arithmetic. Above the
+  *     bound `ALS.fit` runs.
   *   - J1+P3+A4 user-recs: the reference materializes the full
   *     user×product cartesian grid, predicts, then groupByKey+sort
   *     (`OfflineRecommender.scala:71-84`). While |U|×|P| is within
   *     [[graft.Scale.exactPairLimit]] we score that grid on the
-  *     driver from a collected copy of the factors: a small grid costs
+  *     driver from the driver fit's factors: a small grid costs
   *     microseconds of arithmetic but several jobs of scheduling.
   *     Above it, `recommendForAllUsers(20)` — blocked BLAS top-k that
   *     never materializes the grid; this is THE scale-critical rewrite
@@ -71,17 +77,18 @@ object Recommend {
   // hyperparams so a conf override misses instead of returning a model
   // fit at different params.
 
-  /** The deduplicated `(userId, productId, avg score)` training table,
-    * derived from [[Tables.cachedRatings]] and cached ONCE per
-    * (session, dir) — every hyperparameter combo trains on the same
-    * materialization instead of re-scanning and re-pinning a copy per
-    * (rank, reg) cache miss.
+  /** The deduplicated `(userId, productId, avg score)` training table. */
+  private def grouped(spark: SparkSession, dir: String): DataFrame =
+    Tables.cachedRatings(spark, dir)
+      .groupBy("userId", "productId").agg(avg("score").as("score"))
+
+  /** [[grouped]] cached ONCE per (session, dir) — the eval split and every
+    * distributed fit read the same materialization instead of re-scanning
+    * and re-pinning a copy per (rank, reg) cache miss.
     */
   private def aggRatings(spark: SparkSession, dir: String): DataFrame =
     StandingState(spark, ("ml.aggRatings", dir)) {
-      val r = Tables.cachedRatings(spark, dir)
-        .groupBy("userId", "productId").agg(avg("score").as("score"))
-        .cache()
+      val r = grouped(spark, dir).cache()
       r.count()
       r
     }
@@ -92,14 +99,38 @@ object Recommend {
     .setNumBlocks(math.min(10, spark.sparkContext.defaultParallelism))
     .setSeed(42L).setColdStartStrategy("drop")
 
+  /** ALS at (rank, reg) over `ratings` `(userId, productId, score)`. One
+    * bounded collect both decides the branch and feeds the fit: while the
+    * ratings fit [[Scale.exactPairLimit]] (each is one user×item pair) the
+    * fit replays on the driver ([[AlsBridge.fit]]) and fills the factor
+    * copies; above it `ALS.fit` runs over `distributed`.
+    */
+  private def fit(spark: SparkSession, rank: Int, reg: Double,
+      ratings: DataFrame, distributed: => DataFrame): Fitted = {
+    val est = als(spark, rank, reg)
+    val limit = Scale.exactPairLimit(spark)
+    val rows = ratings.limit(math.min(limit, Int.MaxValue - 1L).toInt + 1)
+      .collect()
+    if (rows.length <= limit) {
+      val (m, users, items) = AlsBridge.fit(spark, est, rows.map(_.getInt(0)),
+        rows.map(_.getInt(1)), rows.map(_.getDouble(2).toFloat))
+      new Fitted(m, Some((users, items)))
+    } else new Fitted(est.fit(distributed), None)
+  }
+
+  // The model entries key the limit too, so a lowered bound refits on
+  // the distributed path instead of returning the driver fit.
+  private def fitted(spark: SparkSession, dir: String): Fitted = {
+    val (rank, reg) = (effRank(spark), effReg(spark))
+    StandingState(spark,
+      ("ml.alsModel", dir, rank, reg, Scale.exactPairLimit(spark)))(
+      fit(spark, rank, reg, grouped(spark, dir), aggRatings(spark, dir)))
+  }
+
   /** Train-once-per-sfDir (Verify/Bench run several ALS-derived
     * queries in one JVM; retraining per query would be pure waste).
     */
-  def model(spark: SparkSession, dir: String): ALSModel = {
-    val (rank, reg) = (effRank(spark), effReg(spark))
-    StandingState(spark, ("ml.alsModel", dir, rank, reg))(
-      als(spark, rank, reg).fit(aggRatings(spark, dir)))
-  }
+  def model(spark: SparkSession, dir: String): ALSModel = fitted(spark, dir).model
 
   /** The shared seed-42 80/20 evaluation split, materialized once per
     * (session, dir) — every RMSE-style query evaluates on the same
@@ -124,59 +155,26 @@ object Recommend {
     */
   def fitOnSplit(spark: SparkSession, dir: String, rank: Int,
       reg: Double): ALSModel =
-    StandingState(spark, ("ml.fitOnSplit", dir, rank, reg)) {
+    StandingState(spark,
+      ("ml.fitOnSplit", dir, rank, reg, Scale.exactPairLimit(spark))) {
       val (train, _) = evalSplit(spark, dir)
-      als(spark, rank, reg).fit(train)
+      fit(spark, rank, reg, train, train).model
     }
 
-  private type Factors = Array[(Int, Array[Float])]
+  private type Factors = AlsBridge.Factors
 
-  /** Driver-side copies of one fitted model's factor tables, each as
-    * `(id, features)` sorted by id. Building the holder runs nothing;
-    * the sizes take one job; a table is collected at most once, and only
-    * by a caller whose bound check has said its pair grid fits.
+  /** One fitted model. A driver fit carries both factor tables, each as
+    * `(id, features)` sorted by id; after a distributed fit the item count
+    * takes one job and the item table is collected at most once, and only
+    * by q22 once its bound check has said |items|² fits.
     */
-  private final class LocalFactors(m: ALSModel) {
-    private var users, items: Factors = _ // guarded by this
-
-    /** (|users|, |items|), counted in one single-stage job. */
-    lazy val sizes: (Long, Long) =
-      tables(user = true, item = true).rdd
-        .map(r => if (r.getBoolean(0)) (1L, 0L) else (0L, 1L))
-        .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-
-    /** Both tables; call only once |users| × |items| is within bounds. */
-    def grid: (Factors, Factors) = fetch(user = true)
-
-    /** The item table; call only once |items|² is within bounds. */
-    def itemTable: Factors = fetch(user = false)._2
-
-    // one job collects whichever wanted tables are not here yet
-    private def fetch(user: Boolean): (Factors, Factors) = synchronized {
-      val (wantU, wantI) = (user && users == null, items == null)
-      if (wantU || wantI) {
-        val (u, i) = tables(wantU, wantI).collect().partition(_.getBoolean(0))
-        def sorted(rows: Array[Row]): Factors =
-          rows.map(r => (r.getInt(1), r.getSeq[Float](2).toArray)).sortBy(_._1)
-        if (wantU) users = sorted(u)
-        if (wantI) items = sorted(i)
-      }
-      (users, items)
-    }
-
-    // `(user, id, features)`; a side not asked for is pruned from the plan
-    private def tables(user: Boolean, item: Boolean): DataFrame = {
-      def side(f: DataFrame, isUser: Boolean, keep: Boolean) =
-        f.where(lit(keep)).select(lit(isUser).as("user"), col("id"), col("features"))
-      side(m.userFactors, isUser = true, user)
-        .union(side(m.itemFactors, isUser = false, item))
-    }
-  }
-
-  private def localFactors(s: SparkSession, d: String): LocalFactors = {
-    val (rank, reg) = (effRank(s), effReg(s))
-    StandingState(s, ("ml.localFactors", d, rank, reg))(
-      new LocalFactors(model(s, d)))
+  private final class Fitted(val model: ALSModel,
+      val local: Option[(Factors, Factors)]) {
+    lazy val numItems: Long =
+      local.fold(model.itemFactors.count())(_._2.length.toLong)
+    lazy val items: Factors = local.fold(
+      model.itemFactors.collect()
+        .map(r => (r.getInt(0), r.getSeq[Float](1).toArray)).sortBy(_._1))(_._2)
   }
 
   // The local paths' schemas: exactly the distributed plans' (MlSpec
@@ -199,21 +197,24 @@ object Recommend {
     */
   val userRecs: QueryDef = QueryDef.rowsOnly("q20_als_user_recs") {
     (s, d) =>
-      val local = localFactors(s, d)
-      if (Scale.exactOk(s, s"$d#userItemPairs",
-          local.sizes._1 * local.sizes._2)) {
-        val (users, items) = local.grid
-        localUserRecs(s, users, items)
-      } else
-        model(s, d).recommendForAllUsers(TopK)
-          .select(col("userId"),
-            posexplode(col("recommendations")).as(Seq("pos", "rec")))
-          .select(
-            col("userId").cast("long").as("user_id"),
-            (col("pos") + 1).as("rank"),
-            col("rec.productId").cast("long").as("product_id"),
-            col("rec.rating").cast("double").as("score"))
-          .orderBy("user_id", "rank")
+      val f = fitted(s, d)
+      f.local match {
+        case Some((users, items)) if Scale.exactOk(s, s"$d#userItemPairs",
+            users.length.toLong * items.length) =>
+          localUserRecs(s, users, items)
+        // a distributed fit's grid is over the bound: its ratings, one
+        // pair each, already were
+        case _ =>
+          f.model.recommendForAllUsers(TopK)
+            .select(col("userId"),
+              posexplode(col("recommendations")).as(Seq("pos", "rec")))
+            .select(
+              col("userId").cast("long").as("user_id"),
+              (col("pos") + 1).as("rank"),
+              col("rec.productId").cast("long").as("product_id"),
+              col("rec.rating").cast("double").as("score"))
+            .orderBy("user_id", "rank")
+      }
   }
 
   /** q20 on the driver: f32 dot products accumulated in rank order (the
@@ -264,12 +265,12 @@ object Recommend {
     */
   val itemSims: QueryDef = QueryDef.rowsOnly("q22_item_sim_cosine") {
     (s, d) =>
-      val local = localFactors(s, d)
-      val n = local.sizes._2
+      val fit = fitted(s, d)
+      val n = fit.numItems
       if (Scale.exactOk(s, s"$d#itemPairs", n * n))
-        localItemSims(s, local.itemTable)
+        localItemSims(s, fit.items)
       else {
-        val f = model(s, d).itemFactors
+        val f = fit.model.itemFactors
           .select(col("id"), col("features"))
         val w = Window.partitionBy("product_id")
           .orderBy(desc("sim"), asc("sim_product_id"))

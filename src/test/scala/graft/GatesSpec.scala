@@ -47,8 +47,8 @@ class GatesSpec extends SparkSpec {
     assert(Gates.names.distinct.size == Gates.names.size,
       "one gate entry per query")
     // a gate against a nonexistent dir degrades to NaN/fail instead
-    // of throwing (q23 exempt by design: it measures the reference
-    // fixture, not sfDir)
+    // of throwing (q23 exempt by design: it measures planted ratings
+    // generated in-process, not sfDir)
     val dry = Gates.all(spark, "/nonexistent",
       only = Set("q45_approx_distinct", "q49_dedup_clusters"))
     assert(dry.size == 2 && dry.forall(g => !g.pass && g.value.isNaN))

@@ -1,16 +1,14 @@
 package graft
 
-import graft.ml.Recommend
+import graft.ml.{Planted, Recommend}
 import graft.sources.DelimitedSource
 import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.ml.recommendation.ALS
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.Cross
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** ML regression gate (SURVEY §5.4): ALS with tuned production params
   * on planted ratings must reach a fixed RMSE bar with the same slack
@@ -25,75 +23,13 @@ class MlSpec extends SparkSpec {
   // default 10 blocks, 0.64 with 4.
   private val MaxRmseToBaseline = 0.75
 
-  // The ALS gate's bar on planted ratings. Measured on local[4]: RMSE
-  // 0.671 against a global-mean baseline of 0.827 (seed-42 split). 0.81
-  // is 1.21× the measured RMSE, within the reference bar's 1.35 / 1.11
-  // ≈ 1.22 slack, and below the baseline.
-  private val MaxPlantedRmse = 0.81
-
-  /** A planted rank-3 rating model plus N(0, 0.25) noise on 400
-    * Zipf-active users × 200 products (~20k rows), written once as an
-    * `events` table whose `value` folds back to the planted score
-    * through `Tables.ratings`.
-    */
-  private lazy val plantedDir: String = {
-    val (users, rows, rank) = (400, 20000, 3)
-    val rnd = new java.util.Random(7L)
-    def zipf(n: Int, s: Double): () => Int = {
-      val w = Array.tabulate(n)(i => 1.0 / math.pow(i + 1.0, s))
-      val total = w.sum
-      val cdf = w.scanLeft(0.0)(_ + _).tail.map(_ / total)
-      () => {
-        val i = java.util.Arrays.binarySearch(cdf, rnd.nextDouble())
-        math.min(n - 1, if (i >= 0) i else -i - 1)
-      }
-    }
-    val (nextUser, nextProduct) = (zipf(users, 1.0), zipf(Tables.NumProducts, 0.8))
-    val uf = Array.fill(users, rank)(rnd.nextGaussian())
-    val pf = Array.fill(Tables.NumProducts, rank)(rnd.nextGaussian())
-    val events = (0 until rows).map { i =>
-      val (u, p) = (nextUser(), nextProduct())
-      val dot = (0 until rank).map(k => uf(u)(k) * pf(p)(k)).sum / math.sqrt(rank)
-      val score = math.max(0.5, math.min(4.9,
-        math.rint((2.7 + 0.9 * dot + 0.25 * rnd.nextGaussian()) * 10) / 10))
-      Row(i.toLong * Tables.NumProducts + p,
-        new java.sql.Timestamp(1704067200000L + i * 1000L), u.toLong, "view",
-        math.round((score - 0.5) * 100) / 100.0, "{}")
-    }
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType), StructField("props", StringType)))
-    val dir = StandingState.managedTempDir("graft_planted_").toString
-    spark.createDataFrame(spark.sparkContext.parallelize(events, 4), schema)
-      .write.parquet(s"$dir/events.parquet")
-    dir
-  }
-
-  /** RMSE of predicting `train`'s mean score for every `test` rating. */
-  private def globalMeanRmse(train: DataFrame, test: DataFrame): Double = {
-    val mean = train.agg(avg("score")).head().getDouble(0)
-    math.sqrt(test.agg(avg(pow(col("score") - lit(mean), 2)))
-      .head().getDouble(0))
-  }
+  private def plantedDir: String = Planted.dir(spark)
 
   test("ALS on planted ratings meets the RMSE quality gate") {
-    val ratings = Tables.ratings(spark, plantedDir)
-      .select("userId", "productId", "score")
-    val Array(train, test) = ratings.randomSplit(Array(0.8, 0.2), seed = 42L)
-    // The reference's production params (rank=50, lambda=0.01, 5 iters,
-    // `OfflineRecommender.scala:66`) under ml.ALS's lambda semantics
-    // overfit; this is the tuned regularization the gate holds.
-    val m = new ALS()
-      .setUserCol("userId").setItemCol("productId").setRatingCol("score")
-      .setRank(50).setMaxIter(10).setRegParam(0.3)
-      .setSeed(42L).setColdStartStrategy("drop")
-      .fit(train)
-    val (rmse, base) = (Recommend.evaluateRmse(m, test),
-      globalMeanRmse(train, test))
+    val (rmse, base) = Planted.heldOutRmse(spark)
     info(f"held-out RMSE $rmse%.4f vs global-mean baseline $base%.4f")
-    assert(rmse <= MaxPlantedRmse,
-      f"RMSE $rmse%.4f above the $MaxPlantedRmse quality gate")
+    assert(rmse <= Planted.MaxRmse,
+      f"RMSE $rmse%.4f above the ${Planted.MaxRmse} quality gate")
     assert(rmse < base, f"RMSE $rmse%.4f not below baseline $base%.4f")
   }
 
@@ -144,11 +80,16 @@ class MlSpec extends SparkSpec {
 
   test("ALS blocks are capped at the task slots; q20/q22 stages stay within blocks²") {
     val blocks = math.min(10, spark.sparkContext.defaultParallelism)
-    val models = Seq(Recommend.model(spark, sfTiny),
-      Recommend.fitOnSplit(spark, sfTiny, Recommend.effRank(spark),
-        Recommend.effReg(spark)))
-    for (m <- models; f <- Seq(m.userFactors, m.itemFactors))
-      assert(f.rdd.getNumPartitions == blocks)
+    // a bound below sfTiny's 873 ratings (and its 80% split) keeps the
+    // fits on ALS.fit, and q20/q22 on the block cross product and the
+    // factor cross join: the plans whose width this measures
+    withPairLimit(500) {
+      val models = Seq(Recommend.model(spark, sfTiny),
+        Recommend.fitOnSplit(spark, sfTiny, Recommend.effRank(spark),
+          Recommend.effReg(spark)))
+      for (m <- models; f <- Seq(m.userFactors, m.itemFactors))
+        assert(!onDriver(f) && f.rdd.getNumPartitions == blocks)
+    }
     val widest = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
@@ -156,9 +97,7 @@ class MlSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      // a low bound keeps q20/q22 on the block cross product and the
-      // factor cross join, the plans whose width this measures
-      withPairLimit(1000) {
+      withPairLimit(500) {
         Recommend.userRecs.fn(spark, sfTiny).collect()
         Recommend.itemSims.fn(spark, sfTiny).collect()
       }
@@ -176,13 +115,21 @@ class MlSpec extends SparkSpec {
   private def isLocal(df: DataFrame) =
     df.queryExecution.analyzed.isInstanceOf[LocalRelation]
 
+  // a driver fit's factor tables read only local relations
+  private def onDriver(factors: DataFrame) =
+    factors.queryExecution.analyzed.collectLeaves()
+      .forall(_.isInstanceOf[LocalRelation])
+
   test("q20/q22 on the driver equal their distributed plans; a warm q22 runs no job") {
     val (recs, sims) = (Recommend.userRecs.fn(spark, sfTiny),
       Recommend.itemSims.fn(spark, sfTiny))
-    // q22 stays on the exact cross join under the low bound
+    // sfTiny's 873 ratings still fit the low bound, so both sides score
+    // one driver fit's factors, and q20 runs `recommendForAllUsers` over
+    // local factor tables, as at sf0.1; q22 stays on the exact cross join
     val (dRecs, dSims) = withPairLimit(1000) {
       val (r, q) = (Recommend.userRecs.fn(spark, sfTiny),
         Recommend.itemSims.fn(spark, sfTiny))
+      assert(onDriver(Recommend.model(spark, sfTiny).userFactors))
       assert(!isLocal(r) && !isLocal(q))
       assert(q.queryExecution.analyzed.exists {
         case j: Join => j.joinType == Cross
@@ -194,15 +141,14 @@ class MlSpec extends SparkSpec {
     assert(recs.schema == dRecs.schema)
     assert(sims.schema == dSims.schema)
     assert(sims.collect().toSeq == dSims.collect().toSeq)
-    val (got, want) = (recs.collect(), dRecs.collect())
-    assert(got.length == want.length && got.nonEmpty)
-    for ((g, w) <- got.zip(want)) {
-      assert((0 to 2).map(g.get) == (0 to 2).map(w.get), s"$g vs $w")
-      val (a, b) = (g.getDouble(3), w.getDouble(3))
-      assert(math.abs(a - b) <= 1e-5 * math.max(math.abs(b), 1.0),
-        s"score $g vs $w")
-    }
+    assertSameRecs(recs.collect(), dRecs.collect())
 
+    val jobs = jobsDuring(Recommend.itemSims.fn(spark, sfTiny).collect())
+    assert(jobs == 0, s"a warm q22 submitted $jobs jobs")
+  }
+
+  /** Spark jobs submitted while `body` runs. */
+  private def jobsDuring(body: => Any): Int = {
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -211,16 +157,69 @@ class MlSpec extends SparkSpec {
     ListenerBridge.drain(spark.sparkContext, 10000L)
     spark.sparkContext.addSparkListener(listener)
     try {
-      Recommend.itemSims.fn(spark, sfTiny).collect()
+      body
       ListenerBridge.drain(spark.sparkContext, 10000L)
     } finally spark.sparkContext.removeSparkListener(listener)
-    assert(jobs.get == 0, s"a warm q22 submitted ${jobs.get} jobs")
+    jobs.get
+  }
+
+  /** q20's rows agree: same (user, rank, product), scores within 1e-5. */
+  private def assertSameRecs(got: Array[Row], want: Array[Row]): Unit = {
+    assert(got.length == want.length && got.nonEmpty)
+    for ((g, w) <- got.zip(want)) {
+      assert((0 to 2).map(g.get) == (0 to 2).map(w.get), s"$g vs $w")
+      val (a, b) = (g.getDouble(3), w.getDouble(3))
+      assert(math.abs(a - b) <= 1e-5 * math.max(math.abs(b), 1.0),
+        s"score $g vs $w")
+    }
+  }
+
+  private def sortedFactors(df: DataFrame): Seq[(Int, Seq[Float])] =
+    df.collect().map(r => (r.getInt(0), r.getSeq[Float](1).toSeq)).toSeq
+      .sortBy(_._1)
+
+  test("ALS fits on the driver while the ratings fit the bound, matching ALS.fit") {
+    for (dir <- Seq(sfTiny, plantedDir)) {
+      val (m, recs, rmse) = (Recommend.model(spark, dir),
+        Recommend.userRecs.fn(spark, dir).collect(),
+        Recommend.alsRmse.fn(spark, dir).head().getDouble(0))
+      // below both sides' ratings: ALS.fit and q20's block cross product
+      val (dm, dRecs, dRmse) = withPairLimit(500) {
+        (Recommend.model(spark, dir),
+          Recommend.userRecs.fn(spark, dir).collect(),
+          Recommend.alsRmse.fn(spark, dir).head().getDouble(0))
+      }
+      for ((f, df) <- Seq(m.userFactors -> dm.userFactors,
+          m.itemFactors -> dm.itemFactors)) {
+        assert(onDriver(f) && !onDriver(df))
+        assert(f.schema == df.schema)
+        val (got, want) = (sortedFactors(f), sortedFactors(df))
+        assert(got.map(_._1) == want.map(_._1))
+        val gap = got.zip(want).flatMap { case ((_, a), (_, b)) =>
+          a.zip(b).map { case (x, y) => math.abs(x - y) } }.max
+        info(f"$dir: max |Δ| factor $gap%.2e")
+        assert(gap <= 1e-5, s"$dir: factors differ by $gap")
+      }
+      assertSameRecs(recs, dRecs)
+      assert(math.abs(rmse - dRmse) <= 1e-5, s"$dir: q23 $rmse vs $dRmse")
+    }
+  }
+
+  test("a driver fit submits only its ratings collect, and q20 after it none") {
+    val dir = Planted.write(spark)
+    Tables.cachedRatings(spark, dir)
+    val fit = jobsDuring(Recommend.model(spark, dir))
+    info(s"the driver fit submitted $fit jobs")
+    // the grouped ratings' shuffle-map job and the bounded collect's
+    assert(fit <= 2, s"the fit submitted $fit jobs")
+    val recs = jobsDuring(Recommend.userRecs.fn(spark, dir).collect())
+    assert(recs == 0, s"q20 after a driver fit submitted $recs jobs")
   }
 
   test("q23 at the production params beats the global-mean baseline on planted ratings") {
     val rmse = Recommend.alsRmse.fn(spark, plantedDir).head().getDouble(0)
     val (train, test) = Recommend.evalSplit(spark, plantedDir)
-    val base = globalMeanRmse(train, test)
+    val base = Planted.globalMeanRmse(train, test)
     info(f"held-out RMSE $rmse%.4f vs global-mean baseline $base%.4f")
     assert(rmse < MaxRmseToBaseline * base,
       f"RMSE $rmse%.4f not below $MaxRmseToBaseline × baseline $base%.4f")
