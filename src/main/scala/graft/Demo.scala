@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Library usage demo / manual drive harness: exercises the public
-  * API surface (sources, vector expressions, a query) end-to-end.
+  * API surface (table loaders, vector expressions, queries) end-to-end.
   * `sbt "runMain graft.Demo [sfDir]"`.
   */
 object Demo {
@@ -13,13 +13,6 @@ object Demo {
     val spark = Scale.sessionBuilder("graft-demo", "4")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    val refRes = "/root/reference/recommender/DataLoader/src/main/resources"
-    if (new java.io.File(s"$refRes/products.csv").exists()) {
-      val p = sources.DelimitedSource.products(spark, s"$refRes/products.csv")
-      println(s"products.csv -> ${p.count()} rows")
-      p.select("productId", "categories").show(2, truncate = false)
-    }
 
     val e = Tables.embeddings(spark, dir)
     val a = e.select(col("vec_id").as("ia"), col("embedding").as("va"))

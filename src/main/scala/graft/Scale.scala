@@ -2,7 +2,7 @@ package graft
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Scale-routing knobs. Exact all-pairs similarity (cross join) is
   * only ever the right plan on a bounded input; every operator that
@@ -55,16 +55,33 @@ object Scale {
 
   /** Max input rows for which an exact all-pairs (cross-join) plan is
     * allowed; above it operators switch to their LSH/banded variant.
-    * It also bounds the pairs q20 and q22 score on the driver from
-    * collected ALS factors (|users|×|items| and |items|²), and the
-    * ratings (one user×item pair each) of an ALS fit replayed on the
-    * driver. Override per session with `spark.graft.exactPairLimit`.
+    * It also bounds the inputs the driver takes on in place of a
+    * distributed plan:
+    *  - the pairs q20 and q22 score from collected ALS factors
+    *    (|users|×|items| and |items|²);
+    *  - the ratings (one user×item pair each) of an ALS fit replayed on
+    *    the driver;
+    *  - the edges (one node pair each) of q81/q146's power loop;
+    *  - the ratings q25 rescores, whose co-occurrence pairs are at most
+    *    (RecentK − 1) × the rating count.
+    * Override per session with `spark.graft.exactPairLimit`.
     */
   val DefaultExactPairLimit = 100000L
 
   def exactPairLimit(s: SparkSession): Long =
     s.conf.getOption("spark.graft.exactPairLimit")
       .map(_.toLong).getOrElse(DefaultExactPairLimit)
+
+  /** `df`'s rows while there are at most [[exactPairLimit]] of them,
+    * else None: one bounded collect that both decides a driver-or-
+    * distributed switch and feeds its driver side.
+    */
+  def collectWithin(df: DataFrame): Option[Array[Row]] = {
+    val limit = exactPairLimit(df.sparkSession)
+    val rows = df.limit(math.min(limit, Int.MaxValue - 1L).toInt + 1)
+      .collect()
+    if (rows.length <= limit) Some(rows) else None
+  }
 
   /** Rebalance a frame that is about to feed an EXPENSIVE per-row
     * derive (tokenize + minhash perms, signature hashing) when its

@@ -1,7 +1,12 @@
 package graft
 
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.datasources.parquet.graft.ParquetBridge
+import org.apache.spark.sql.types.StructType
 
 /** Parquet loaders for the driver testdata star schema (TESTDATA.md /
   * FIXTURES.md §2). Every operator takes `(SparkSession, sfDir)` and
@@ -17,8 +22,38 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** `$dir/$name.parquet` with the schema `spark.read.parquet` would
+    * infer, read from one footer on the driver. Spark's own inference
+    * runs a job for it even for a single file; this runs none.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    footerSchema(spark, path)
+      .fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+  }
+
+  /** The schema in the footer of `path`, or of its first data file when
+    * it is a directory, converted under the session's parquet confs as
+    * Spark converts it when it does not merge schemas. None when there
+    * is no such file, so the caller's read reports the missing path.
+    */
+  private def footerSchema(s: SparkSession, path: String)
+      : Option[StructType] = {
+    val conf = s.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    def data(name: String) = !name.startsWith("_") && !name.startsWith(".")
+    val file =
+      if (!fs.exists(p)) None
+      else if (fs.getFileStatus(p).isFile) Some(fs.getFileStatus(p))
+      else fs.listStatus(p).filter(f => f.isFile && data(f.getPath.getName))
+        .sortBy(_.getPath.getName).headOption
+    file.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+      val footer = try new Footer(f.getPath, r.getFooter) finally r.close()
+      ParquetBridge.readSchema(Seq(footer), s)
+    }
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

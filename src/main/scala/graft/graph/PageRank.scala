@@ -1,8 +1,9 @@
 package graft.graph
 
-import graft.QueryDef
-import org.apache.spark.sql.DataFrame
+import graft.{QueryDef, Scale}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 
 /** Weighted PageRank over an edge list — the canonical iterative
   * graph operator a curation stack uses for link-graph authority
@@ -13,7 +14,14 @@ import org.apache.spark.sql.functions._
   * edge sources) plus one hash aggregate (contributions by
   * destination) — both shuffle on the node key, so a 1000-executor
   * cluster runs each round as a single co-partitioned shuffle pair,
-  * and AQE handles hub-node skew. No driver-side state at any point.
+  * and AQE handles hub-node skew.
+  *
+  * While the edges fit [[graft.Scale.exactPairLimit]] (each edge is
+  * one node pair), q81 and q146 run the same loop on the driver over
+  * the collected edges ([[ranked]]): on a few thousand edges the
+  * distributed loop's cost is its twenty-odd jobs of scheduling, not
+  * its arithmetic. The driver loop keeps the plan's operand order, so
+  * both sides give the same doubles.
   *
   * Iterative hygiene (the [[graft.dedup.Dedup]] CC lesson): every
   * round `localCheckpoint`s the new rank table — without it Catalyst
@@ -142,10 +150,7 @@ object PageRank {
         // the contribution quantizer avoids).
         " SELECT node, rank FROM r3 ORDER BY node")
         .stripMargin.replaceAll("\n", "")
-    ) { (s, d) =>
-      val edges = Triangles.cachedWeightedEdges(s, d)
-      pageRank(edges).orderBy("node")
-    }
+    )((s, d) => ranked(Triangles.cachedWeightedEdges(s, d), trust = false))
   }
 
   /** q146 — TrustRank (Gyöngyi, Garcia-Molina & Pedersen, VLDB
@@ -208,10 +213,7 @@ object PageRank {
         iter(1) + "," + iter(2) + "," + iter(3) +
         " SELECT node, rank FROM r3 ORDER BY node")
         .stripMargin.replaceAll("\n", "")
-    ) { (s, d) =>
-      val edges = Triangles.cachedWeightedEdges(s, d)
-      trustRank(edges).orderBy("node")
-    }
+    )((s, d) => ranked(Triangles.cachedWeightedEdges(s, d), trust = true))
   }
 
   /** TrustRank over `edges` (src, dst, w): seed mass 1/|S| on nodes
@@ -251,6 +253,66 @@ object PageRank {
       if (it % 8 == 0 && it < iters) r = r.localCheckpoint()
     }
     r
+  }
+
+  /** q81 (`trust = false`) or q146 (`trust = true`) over `edges`
+    * (src: bigint, dst: bigint, w: bigint), ordered by node. One
+    * bounded collect decides the side: while the edges fit
+    * [[Scale.exactPairLimit]] the loop runs on the driver
+    * ([[localRank]]); above it [[pageRank]] or [[trustRank]] runs.
+    */
+  def ranked(edges: DataFrame, trust: Boolean): DataFrame =
+    Scale.collectWithin(edges) match {
+      case Some(rows) =>
+        localRank(edges.sparkSession, rows, edges.schema, Iterations,
+          Damping, trust)
+      case None =>
+        (if (trust) trustRank(edges) else pageRank(edges)).orderBy("node")
+    }
+
+  /** [[pageRank]] (or [[trustRank]]) on the driver over collected
+    * `(src, dst, w)` rows, as a local relation already in node order.
+    * It keeps the plans' arithmetic: p = w / out-weight as doubles,
+    * each contribution `floor(rank * p * 1e12)` summed exactly as a
+    * long and divided by 1e12, and the teleport term `teleport / n`
+    * (PageRank) or `teleport * (1 / ns)` on seeds (TrustRank). As in
+    * the joins, a null src carries no rank, and a null node or a null
+    * dst never receives any.
+    */
+  private def localRank(s: SparkSession, edges: Array[Row],
+      schema: StructType, iters: Int, damping: Double, trust: Boolean)
+      : DataFrame = {
+    def node(r: Row, i: Int): Option[Long] =
+      if (r.isNullAt(i)) None else Some(r.getLong(i))
+    // ORDER BY node puts a null first, as None sorts
+    val nodes = edges.flatMap(r => Seq(node(r, 0), node(r, 1))).distinct.sorted
+    val at = nodes.zipWithIndex.toMap
+    val live = edges.filter(!_.isNullAt(0))
+    val ow = live.groupMapReduce(_.getLong(0))(_.getLong(2))(Math.addExact)
+    val src = live.map(r => at(node(r, 0)))
+    val dst = live.map(r => if (r.isNullAt(1)) -1 else at(node(r, 1)))
+    val p = live.map(r => r.getLong(2).toDouble / ow(r.getLong(0)).toDouble)
+    val n = nodes.length
+    val seed = nodes.map(_.exists(_ % 100 == 0))
+    val ns = seed.count(identity)
+    val start = Array.tabulate(n)(i =>
+      if (!trust) 1.0 / n else if (seed(i)) 1.0 / ns else 0.0)
+    val jump = Array.tabulate(n)(i =>
+      if (trust) teleport(damping) * start(i) else teleport(damping) / n)
+    var rank = start
+    for (_ <- 1 to iters) {
+      val c = new Array[Long](n)
+      for (k <- src.indices if dst(k) >= 0)
+        c(dst(k)) = Math.addExact(c(dst(k)),
+          math.floor(rank(src(k)) * p(k) * 1e12).toLong)
+      rank = Array.tabulate(n)(i => jump(i) + damping * (c(i).toDouble / 1e12))
+    }
+    val rows = new java.util.ArrayList[Row](n)
+    for (i <- 0 until n) rows.add(Row(nodes(i).getOrElse(null), rank(i)))
+    s.createDataFrame(rows, StructType(Seq(
+      StructField("node", LongType,
+        schema("src").nullable || schema("dst").nullable),
+      StructField("rank", DoubleType))))
   }
 
   val defs: Seq[QueryDef] = Seq(pageRankQ, trustRankQ)

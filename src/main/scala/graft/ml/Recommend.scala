@@ -108,14 +108,14 @@ object Recommend {
   private def fit(spark: SparkSession, rank: Int, reg: Double,
       ratings: DataFrame, distributed: => DataFrame): Fitted = {
     val est = als(spark, rank, reg)
-    val limit = Scale.exactPairLimit(spark)
-    val rows = ratings.limit(math.min(limit, Int.MaxValue - 1L).toInt + 1)
-      .collect()
-    if (rows.length <= limit) {
-      val (m, users, items) = AlsBridge.fit(spark, est, rows.map(_.getInt(0)),
-        rows.map(_.getInt(1)), rows.map(_.getDouble(2).toFloat))
-      new Fitted(m, Some((users, items)))
-    } else new Fitted(est.fit(distributed), None)
+    Scale.collectWithin(ratings) match {
+      case Some(rows) =>
+        val (m, users, items) = AlsBridge.fit(spark, est,
+          rows.map(_.getInt(0)), rows.map(_.getInt(1)),
+          rows.map(_.getDouble(2).toFloat))
+        new Fitted(m, Some((users, items)))
+      case None => new Fitted(est.fit(distributed), None)
+    }
   }
 
   // The model entries key the limit too, so a lowered bound refits on

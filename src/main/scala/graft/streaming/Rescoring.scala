@@ -1,9 +1,15 @@
 package graft.streaming
 
-import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+
+import graft.{QueryDef, Scale, Tables}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Cast,
+  EvalMode, GenericInternalRow, Literal, Log10, Round, Subtract}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** The reference's streaming rescorer
   * (`StreamingRecommender.scala:116-263`) re-expressed set-oriented:
@@ -19,6 +25,14 @@ import org.apache.spark.sql.functions._
   * (`StreamingRecommender.scala:151-159,197-231,250-252`):
   * candidate score = avg(sim × recentScore) + log10(#high + 1) −
   * log10(#low + 1), high = rating > 3.
+  *
+  * The batch query q25 scores in memory while its ratings fit
+  * [[graft.Scale.exactPairLimit]], as the reference scores each event
+  * against local maps (`StreamingRecommender.scala:78-90`): the
+  * recent-K cap, co-occurrence sims, sim top-K, rated-set anti-join
+  * and top-5 run on the driver over the collected ratings, with the
+  * plan's scalar arithmetic evaluated by Catalyst's own expressions.
+  * The stream keeps [[rescore]].
   */
 object Rescoring {
 
@@ -167,25 +181,156 @@ object Rescoring {
        |   CAST(rank AS INT) AS rank
        | FROM ranked WHERE rank <= $OutK
        | ORDER BY user_id, rank""".stripMargin.replaceAll("\n", "")
-  ) { (s, d) =>
-    // cachedRatings: the derived table feeds three subtrees (recent
-    // window, cooc self-join, rated anti-set) — persisted once, the
-    // events scan + derivation runs once instead of three times.
-    val ratings = Tables.cachedRatings(s, d)
-    // The recent-K window feeds FOUR subtrees (the rescore candidate
-    // join + the sim build's cnt table and both self-join sides) —
-    // the exchange was reused but the sort+window re-ran per
-    // reference. Materialize the ~K-rows-per-user cap once (r19).
-    val recent = cappedRecent(ratings, RecentK).localCheckpoint()
-    // distinct pre-aggregation shrinks the anti-join build side from
-    // |ratings| rows to |user×product| pairs before the hash relation
-    // is built (NOT EXISTS semantics are set-based anyway).
-    rescore(recent,
-        coocSimsFromCapped(recent.select("userId", "productId")),
-        ratings.select("userId", "productId").distinct())
-      .select(col("userId").as("user_id"), col("candidate").as("product_id"),
-        col("rec_score"), col("rank"))
-      .orderBy("user_id", "rank")
+  )((s, d) => batchRecs(Tables.cachedRatings(s, d)))
+
+  /** q25 over `ratings` (userId, productId, score, ts), ordered by
+    * (user_id, rank). One bounded collect decides the side: while the
+    * ratings fit [[Scale.exactPairLimit]] the pipeline runs on the
+    * driver ([[localRecs]]); above it the distributed plan runs.
+    */
+  def batchRecs(ratings: DataFrame): DataFrame = {
+    // ts as its microseconds, the order a timestamp sorts in
+    val keyed = ratings.select(col("userId"), col("productId"),
+      col("score"), unix_micros(col("ts")))
+    Scale.collectWithin(keyed) match {
+      case Some(rows) => localRecs(ratings.sparkSession, rows, ratings.schema)
+      case None =>
+        // The recent-K window feeds FOUR subtrees (the rescore
+        // candidate join + the sim build's cnt table and both self-join
+        // sides): materialize the ~K-rows-per-user cap once.
+        val recent = cappedRecent(ratings, RecentK).localCheckpoint()
+        // distinct pre-aggregation shrinks the anti-join build side
+        // from |ratings| rows to |user×product| pairs before the hash
+        // relation is built (NOT EXISTS semantics are set-based anyway).
+        rescore(recent,
+            coocSimsFromCapped(recent.select("userId", "productId")),
+            ratings.select("userId", "productId").distinct())
+          .select(col("userId").as("user_id"),
+            col("candidate").as("product_id"), col("rec_score"), col("rank"))
+          .orderBy("user_id", "rank")
+    }
+  }
+
+  private final case class Rating(user: Option[Int], product: Option[Int],
+      score: Option[Double], ts: Option[Long])
+
+  // Spark's order on doubles: NaN above every number, -0.0 equal to 0.0
+  private val SqlDouble: Ordering[Double] = new Ordering[Double] {
+    def compare(x: Double, y: Double): Int = SQLOrderingUtil.compareDoubles(x, y)
+  }
+
+  /** [[cappedRecent]], [[coocSimsFromCapped]] and [[rescore]] on the
+    * driver over collected `(userId, productId, score, ts micros)`
+    * rows, as a local relation already in (user_id, rank) order. Spark's
+    * null semantics hold throughout: ASC sorts nulls first and DESC
+    * last, a null key never equi-joins, and the rated-set anti-join
+    * keeps a null user's candidates. The per-row decimal cast, the
+    * exact decimal sum, its cast back to double and the rounded score
+    * are Catalyst's own expressions, evaluated under the session's
+    * ANSI mode.
+    */
+  private def localRecs(s: SparkSession, rows: Array[Row],
+      schema: StructType): DataFrame = {
+    def opt[T](r: Row, i: Int): Option[T] =
+      if (r.isNullAt(i)) None else Some(r.getAs[T](i))
+    val ratings = rows.map(r =>
+      Rating(opt[Int](r, 0), opt[Int](r, 1), opt[Double](r, 2), opt[Long](r, 3)))
+    // cappedRecent's window: ts DESC, productId ASC, score ASC
+    val recency = Ordering.by((r: Rating) => (r.ts, r.product, r.score))(
+      Ordering.Tuple3(Ordering[Option[Long]].reverse, Ordering[Option[Int]],
+        Ordering.Option(SqlDouble)))
+    val byUser = ratings.groupBy(_.user)
+    val capped = byUser.map { case (u, rs) =>
+      u -> rs.sorted(recency).take(RecentK) }
+
+    // coocSimsFromCapped: every ordered pair of a user's capped rows,
+    // as sorted (pa << 32 | pb) keys whose runs are the pair counts
+    val cnt = capped.values.flatten.flatMap(_.product)
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+    val keys = Array.newBuilder[Long]
+    for ((Some(_), hist) <- capped) {
+      val ps = hist.flatMap(_.product)
+      for (a <- ps; b <- ps if a != b) keys += a.toLong << 32 | (b & 0xffffffffL)
+    }
+    val sorted = keys.result()
+    java.util.Arrays.sort(sorted)
+    val sims = mutable.ArrayBuffer[(Int, Int, Double)]()
+    var i = 0
+    while (i < sorted.length) {
+      var j = i
+      while (j < sorted.length && sorted(j) == sorted(i)) j += 1
+      val (pa, pb) = ((sorted(i) >> 32).toInt, sorted(i).toInt)
+      sims += ((pa, pb, (j - i).toDouble /
+        math.sqrt(Math.multiplyExact(cnt(pa), cnt(pb)).toDouble)))
+      i = j
+    }
+    val simTop = sims.groupBy(_._1).map { case (pa, ss) =>
+      pa -> ss.sortBy(x => (x._3, x._2))(
+        Ordering.Tuple2(SqlDouble.reverse, Ordering.Int)).take(SimK)
+        .map(x => (x._2, x._3)) }
+
+    // rescore, one user at a time: candidates minus the user's rated
+    // set, aggregated per candidate, scored, top-OutK
+    final class Acc {
+      var sum: Decimal = null
+      var n, incr, decr = 0L
+    }
+    val conf = s.sessionState.conf
+    val mode = EvalMode.fromSQLConf(conf)
+    val in = new GenericInternalRow(3)
+    val toDecimal = Cast(BoundReference(0, DoubleType, nullable = false),
+      DecimalType(28, 12), None, mode)
+    // the cast of each distinct sim × score, by its bits
+    val decimals = mutable.LongMap[Decimal]()
+    def decimal(x: Double): Decimal =
+      decimals.getOrElseUpdate(java.lang.Double.doubleToRawLongBits(x), {
+        in.update(0, x)
+        toDecimal.eval(in).asInstanceOf[Decimal]
+      })
+    val toDouble = Cast(BoundReference(0, DecimalType(38, 12), nullable = false),
+      DoubleType, None, mode)
+    val recScore = Round(
+      Subtract(
+        Add(BoundReference(0, DoubleType, nullable = true),
+          Log10(BoundReference(1, DoubleType, nullable = false))),
+        Log10(BoundReference(2, DoubleType, nullable = false))),
+      Literal(4), conf.ansiEnabled)
+    // rec_score DESC, candidate ASC
+    val byScore = Ordering.by((x: (Int, Option[Double])) => (x._2, x._1))(
+      Ordering.Tuple2(Ordering.Option(SqlDouble).reverse, Ordering.Int))
+    val out = new java.util.ArrayList[Row]()
+    for ((u, hist) <- capped.toSeq.sortBy(_._1)) {
+      // a null user never matches the rated set
+      val rated = if (u.isEmpty) Set.empty[Int] else byUser(u).flatMap(_.product).toSet
+      val groups = mutable.LongMap[Acc]()
+      for (r <- hist; pa <- r.product; (pb, sim) <- simTop.getOrElse(pa, Nil)
+          if !rated(pb)) {
+        val acc = groups.getOrElseUpdate(pb, new Acc)
+        acc.n += 1
+        for (score <- r.score) {
+          val d = decimal(sim * score)
+          if (d != null) acc.sum = if (acc.sum == null) d else acc.sum + d
+          if (SqlDouble.gt(score, 3.0)) acc.incr += 1 else acc.decr += 1
+        }
+      }
+      val scored = groups.toSeq.map { case (c, acc) =>
+        if (acc.sum == null) in.setNullAt(0)
+        else {
+          in.update(0, acc.sum)
+          in.update(0, toDouble.eval(in).asInstanceOf[Double] / acc.n.toDouble)
+        }
+        in.update(1, (acc.incr + 1).toDouble)
+        in.update(2, (acc.decr + 1).toDouble)
+        (c.toInt, Option(recScore.eval(in)).map(_.asInstanceOf[Double]))
+      }
+      for (((c, score), rank) <- scored.sorted(byScore).take(OutK).zipWithIndex)
+        out.add(Row(u.getOrElse(null), c, score.getOrElse(null), rank + 1))
+    }
+    s.createDataFrame(out, StructType(Seq(
+      StructField("user_id", IntegerType, schema("userId").nullable),
+      StructField("product_id", IntegerType, schema("productId").nullable),
+      StructField("rec_score", DoubleType),
+      StructField("rank", IntegerType, nullable = false))))
   }
 
   /** S10/P7/F5 — the Kafka Streams log topology

@@ -308,4 +308,35 @@ class GraphSpec extends SparkSpec {
     val rebuilt = Triangles.cachedWeightedEdges(other, sfTiny)
     assert(rebuilt.count() > 0, "evicted live session failed to rebuild")
   }
+
+  test("q81/q146 on the driver equal their distributed plans") {
+    // parallel 1->2 edges, no in-edges into 3, a sink at 9, seeds 100
+    // and 200; then null ends, which never join
+    val fixture = Seq((1L, 2L, 1L), (1L, 2L, 2L), (2L, 1L, 1L), (3L, 1L, 1L),
+      (3L, 9L, 5L), (1L, 9L, 1L), (100L, 1L, 3L), (200L, 100L, 1L),
+      (2L, 200L, 1L)).toDF("src", "dst", "w")
+    val withNulls = fixture.union(Seq[(Option[Long], Option[Long], Long)](
+      (None, Some(1L), 2L), (Some(2L), None, 1L), (Some(7L), Some(1L), 1L))
+      .toDF("src", "dst", "w"))
+    for ((name, edges) <- Seq(
+        "sf0.001" -> graph.Triangles.cachedWeightedEdges(spark, sfTiny),
+        "fixture" -> fixture, "nulls" -> withNulls);
+        trust <- Seq(false, true)) {
+      val got = graph.PageRank.ranked(edges, trust)
+      val want = withPairLimit(1)(graph.PageRank.ranked(edges, trust))
+      assert(isLocal(got) && !isLocal(want), s"$name trust=$trust")
+      assert(got.schema == want.schema, s"$name trust=$trust")
+      val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+      assert(g.nonEmpty && g == w, s"$name trust=$trust")
+    }
+  }
+
+  test("a warm q81 or q146 submits at most one job") {
+    for (q <- graph.PageRank.defs) {
+      q.fn(spark, sfTiny).collect()
+      val jobs = jobsDuring(q.fn(spark, sfTiny).collect())
+      info(s"a warm ${q.name} submitted $jobs jobs")
+      assert(jobs <= 1, s"a warm ${q.name} submitted $jobs jobs")
+    }
+  }
 }

@@ -3,8 +3,7 @@ package graft
 import graft.ml.{Planted, Recommend}
 import graft.sources.DelimitedSource
 import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageSubmitted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.Cross
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LocalRelation}
@@ -107,14 +106,6 @@ class MlSpec extends SparkSpec {
       s"a q20/q22 stage ran ${widest.get} tasks with $blocks ALS blocks")
   }
 
-  private def withPairLimit[T](limit: Long)(body: => T): T = {
-    spark.conf.set("spark.graft.exactPairLimit", limit)
-    try body finally spark.conf.unset("spark.graft.exactPairLimit")
-  }
-
-  private def isLocal(df: DataFrame) =
-    df.queryExecution.analyzed.isInstanceOf[LocalRelation]
-
   // a driver fit's factor tables read only local relations
   private def onDriver(factors: DataFrame) =
     factors.queryExecution.analyzed.collectLeaves()
@@ -145,22 +136,6 @@ class MlSpec extends SparkSpec {
 
     val jobs = jobsDuring(Recommend.itemSims.fn(spark, sfTiny).collect())
     assert(jobs == 0, s"a warm q22 submitted $jobs jobs")
-  }
-
-  /** Spark jobs submitted while `body` runs. */
-  private def jobsDuring(body: => Any): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    ListenerBridge.drain(spark.sparkContext, 10000L)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      ListenerBridge.drain(spark.sparkContext, 10000L)
-    } finally spark.sparkContext.removeSparkListener(listener)
-    jobs.get
   }
 
   /** q20's rows agree: same (user, rank, product), scores within 1e-5. */

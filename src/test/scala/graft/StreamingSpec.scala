@@ -1541,4 +1541,62 @@ class StreamingSpec extends SparkSpec {
       spark.conf.unset("spark.graft.text.sigStoreDir")
     }
   }
+
+  /** q25's edge cases as ratings: user 1 over the recent-K cap with
+    * same-ts ties, repeated products at different scores, exact 3.0
+    * scores and a null ts; null user, product and score; and two users
+    * with identical histories, which tie sim(10,11) with sim(10,12), so
+    * user 22's candidates 11 and 12 tie on rec_score.
+    */
+  private def q25Fixture = {
+    val rnd = new scala.util.Random(25)
+    val random = for {
+      u <- 1 to 12
+      _ <- 0 until (if (u == 1) 26 else 6)
+    } yield (Option(u), Option(rnd.nextInt(8)),
+      Option((rnd.nextInt(10) + 1) * 0.5), Option(ts(1000L + rnd.nextInt(5))))
+    val twins = for (u <- Seq(20, 21); p <- Seq(10, 11, 12))
+      yield (Option(u), Option(p), Option(3.0), Option(ts(2000L + p)))
+    val edges = Seq(
+      (Option(22), Option(10), Option(4.0), Option(ts(3000L))),
+      (Option(1), Option(3), Option(3.0), None),
+      (Option(2), Option(3), Option(3.0), None),
+      (Option(2), Option(3), Option(4.5), Option(ts(1001L))),
+      (None, Option(1), Option(4.0), Option(ts(1002L))),
+      (None, Option(2), Option(1.0), None),
+      (Option(3), None, Option(2.0), Option(ts(1003L))),
+      (Option(4), Option(2), None, Option(ts(1004L))))
+    (random ++ twins ++ edges).toDF("userId", "productId", "score", "ts")
+  }
+
+  test("q25 on the driver equals its distributed plan") {
+    val fixture = q25Fixture
+    val sims = Rescoring.coocSims(fixture).collect()
+    assert(sims.groupBy(_.getInt(0)).exists { case (_, ss) =>
+      ss.map(_.getDouble(2)).distinct.length < ss.length },
+      "the fixture has no tie in sim")
+    for ((name, ratings) <- Seq(
+        "sf0.001" -> Tables.cachedRatings(spark, sfTiny),
+        "fixture" -> fixture)) {
+      val got = Rescoring.batchRecs(ratings)
+      val want = withPairLimit(1)(Rescoring.batchRecs(ratings))
+      assert(isLocal(got) && !isLocal(want), name)
+      assert(got.schema == want.schema, name)
+      val (g, w) = (got.collect().toSeq, want.collect().toSeq)
+      assert(g.nonEmpty && g == w, name)
+      if (name == "fixture") {
+        assert(w.exists(_.isNullAt(0)), "no null user's recs")
+        assert(w.groupBy(r => Option(r.get(0))).exists { case (_, rs) =>
+          rs.map(_.get(2)).distinct.length < rs.length },
+          "the fixture has no tie in rec_score")
+      }
+    }
+  }
+
+  test("a warm q25 submits at most one job") {
+    Rescoring.rescoreBatch.fn(spark, sfTiny).collect()
+    val jobs = jobsDuring(Rescoring.rescoreBatch.fn(spark, sfTiny).collect())
+    info(s"a warm q25 submitted $jobs jobs")
+    assert(jobs <= 1, s"a warm q25 submitted $jobs jobs")
+  }
 }
